@@ -3,14 +3,21 @@
 ``Client.java:11-49`` reads ``-DnumberOfThread`` / ``-DrunDuration`` /
 ``-DsleepDuration`` / ``-Dtables`` from JVM system properties, spawns
 one coordinator, N workers and a staleness monitor, sleeps, then
-``System.exit(0)``.  Here the same four knobs configure a Structured
-Streaming run over the change feed: parallelism sizes the shuffle
-partitions (scan fan-out is engine-scheduled, A15), the poll interval
-is the trigger cadence, the table restriction is a pushed ``In``
-filter (never SQL-interpolated — Config.java's injection-by-
-construction and missing-comma bugs are structurally impossible), and
-the run duration bounds ``awaitTermination``; shutdown is a drained
-stop, not a hard exit.
+``System.exit(0)``.  Here the same knobs configure one Structured
+Streaming pass over the change feed: parallelism sizes the shuffle
+partitions (scan fan-out is engine-scheduled, A15), the table
+restriction is a pushed ``In`` filter (never SQL-interpolated —
+Config.java's injection-by-construction and missing-comma bugs are
+structurally impossible), and the run duration bounds
+``awaitTermination``; shutdown is a drained stop, not a hard exit.
+
+``run`` is one ``availableNow`` pass: it extracts every batch that
+arrived since the last pass on the same ``--out`` (the checkpoint holds
+the high-water mark) and returns.  The caller owns the poll cadence —
+call ``run`` again to poll again; ``--poll-interval-ms`` is parsed for
+``-DsleepDuration`` parity and not read.  The staleness monitor is the
+same pass: stdout carries one ``epoch=…`` line per epoch so far, then
+one ``staleness batch=…`` line per epoch this pass extracted with rows.
 
 Usage:
   python -m cdc_extractor_spark run --sf-dir /root/testdata/sf0.001 \\
@@ -31,8 +38,8 @@ def _cmd_run(args: argparse.Namespace) -> int:
     from cdc_extractor_spark.session import get_session
     from cdc_extractor_spark.sources.changes import changes_df
     from cdc_extractor_spark.streaming.pipeline import (
+        read_epoch_metrics,
         run_cdc_pipeline,
-        run_observed_staleness,
         write_feed_batches,
     )
 
@@ -46,10 +53,16 @@ def _cmd_run(args: argparse.Namespace) -> int:
         )
     tables = tuple(t for t in args.tables.split(",") if t) or None
     timeout = int(args.run_duration_min * 60)
-    metrics = run_cdc_pipeline(
-        spark, feed, args.out, timeout_sec=timeout, tables=tables
+    extracted: list[dict] = []
+    run_cdc_pipeline(
+        spark,
+        feed,
+        args.out,
+        timeout_sec=timeout,
+        tables=tables,
+        on_epoch=extracted.append,
     )
-    rows = metrics.orderBy("epoch_id").collect()
+    rows = read_epoch_metrics(os.path.join(args.out, "metrics"))
     for r in rows:
         print(
             f"epoch={r['epoch_id']} offsets=({r['min_event_id']},"
@@ -62,14 +75,12 @@ def _cmd_run(args: argparse.Namespace) -> int:
         (r["uptodate_ms"] for r in rows if r["uptodate_ms"] is not None),
         default=0,
     )
-    stale = run_observed_staleness(
-        spark, feed, os.path.join(args.out, "obs"), now_ms, timeout
-    )
-    for s in stale:
-        print(
-            f"staleness batch={s['batch_id']} rows={s['n_rows']} "
-            f"lag_ms={s['staleness_ms']}"
-        )
+    for r in extracted:
+        if r["n_rows"]:
+            print(
+                f"staleness batch={r['epoch_id']} rows={r['n_rows']} "
+                f"lag_ms={now_ms - r['uptodate_ms']}"
+            )
     print(f"extract dir: {os.path.join(args.out, 'extract')}")
     return 0
 
@@ -120,7 +131,11 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--feed", default=None, help="existing feed dir (else derived)")
     r.add_argument("--workers", type=int, default=4, help="-DnumberOfThread")
     r.add_argument(
-        "--poll-interval-ms", type=int, default=1000, help="-DsleepDuration"
+        "--poll-interval-ms",
+        type=int,
+        default=1000,
+        help="-DsleepDuration; not read: each run is one pass, and the "
+        "caller owns the poll cadence",
     )
     r.add_argument(
         "--tables", default="customer,orders", help="-Dtables (comma list)"

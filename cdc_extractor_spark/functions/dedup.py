@@ -308,8 +308,9 @@ def connected_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     # symmetric edge list; the count only balances load, never
     # semantics — partition-count invariance is swept registry-wide);
     # the whole loop executes inside this scope (every round ends in
-    # an eager localCheckpoint + count), so the conf is restored
-    # before the final labels frame is returned to the caller.
+    # one count that materializes that round's lazy localCheckpoint),
+    # so the conf is restored before the final labels frame is
+    # returned to the caller.
     pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=False)
     n_pairs = pairs.count()
     loop_parts = data_proportional_partitions(

@@ -5,32 +5,38 @@ streaming query (SURVEY.md §3.2-3.4).
 Mapping (SURVEY.md §3):
 - coordinator poll loop (``CoordinatorRunnable.java:67-110``: sleep →
   ``max(event_id)`` → emit ``(lo, hi]`` task)  ≙  the file source's
-  ``latestOffset`` per trigger; ``sleepDuration`` ≙ trigger interval;
-  ``maxFilesPerTrigger=1`` makes one arriving file one epoch, exactly
-  one ``Task``;
+  ``latestOffset`` per trigger; ``sleepDuration`` is the caller's
+  cadence of ``availableNow`` passes; ``maxFilesPerTrigger=1`` makes
+  one arriving file one epoch, exactly one ``Task``;
 - worker epoch body (``WorkerRunnable.java:85-200``: range scan →
   stringify → append chunk file → distinct xids → commit-ts lookup →
   advance ``uptodate``)  ≙  ``foreachBatch`` below: the SAME pure
   batch operators (operators/changelog.py) applied to the epoch's
   DataFrame, then the A10 pipe sink append;
 - staleness monitor (``QueryRequestRunnable.java:30-54``)  ≙  the
-  engine's ``StreamingQueryProgress`` + our per-epoch metrics rows —
-  no shared mutable ``uptodate`` static, no broken lock (§2 bug list).
+  extraction query's own per-epoch metrics rows: each epoch's
+  ``uptodate_ms`` is collected to the driver as the epoch commits, and
+  the caller reads ``now − uptodate`` off the rows of the epochs it just
+  extracted — one streaming pass, no shared mutable ``uptodate`` static,
+  no broken lock (§2 bug list).
 
 The bounded task queue / backpressure (``Client.java:17``,
-``ArrayBlockingQueue(10000)``) has no code here at all: trigger
-pacing + ``maxFilesPerTrigger`` are the engine's backpressure.
+``ArrayBlockingQueue(10000)``) has no code here at all:
+``maxFilesPerTrigger`` makes each arrived file one epoch, and a pass
+drains the backlog epoch by epoch.
 
 Scale: each epoch is a distributed job over the files' row groups; the
 per-epoch metrics are one driver-side row per epoch (O(epochs), not
-O(rows)).  At 100 TB the identical pipeline runs with the feed dir on
-object storage and a real trigger interval; nothing below assumes local
-mode.
+O(rows)), published as one small file per epoch on a driver-local
+path.  At 100 TB the identical pipeline runs with the feed dir on
+object storage, polled on the caller's cadence; nothing below assumes
+local mode.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -146,21 +152,59 @@ def read_change_stream(spark: SparkSession, feed_dir: str) -> DataFrame:
     )
 
 
+def _epoch_metrics_arrow_schema():
+    import pyarrow as pa
+
+    return pa.schema([(f.name, pa.int64()) for f in EPOCH_METRICS_SCHEMA])
+
+
+def _publish_epoch_metrics(metrics_dir: str, row: dict) -> None:
+    """Write one epoch's metrics row as ``epoch_{id}.parquet``: a temp
+    file renamed into place, so a replayed epoch replaces its own row
+    instead of appending a duplicate, and no reader sees a torn file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    name = f"epoch_{row['epoch_id']:05d}.parquet"
+    tmp = os.path.join(metrics_dir, f".{name}.tmp")
+    pq.write_table(
+        pa.Table.from_pylist([row], schema=_epoch_metrics_arrow_schema()), tmp
+    )
+    os.replace(tmp, os.path.join(metrics_dir, name))
+
+
+def read_epoch_metrics(metrics_dir: str) -> list[dict]:
+    """Every epoch's metrics row under ``metrics_dir``, in epoch order,
+    read on the driver — O(epochs) small files, no Spark job."""
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(metrics_dir, schema=_epoch_metrics_arrow_schema())
+    return table.sort_by("epoch_id").to_pylist()
+
+
 def run_cdc_pipeline(
     spark: SparkSession,
     feed_dir: str,
     out_dir: str,
     timeout_sec: int = 120,
     tables: tuple[str, ...] | None = None,
+    on_epoch: Callable[[dict], None] | None = None,
 ) -> DataFrame:
     """Run the full §3.3 epoch body over every available batch and
-    return the per-epoch metrics DataFrame.
+    return the per-epoch metrics DataFrame (every epoch so far, not
+    just this call's).
 
     Per epoch (``foreachBatch``):
     1. A10: append the stringified extract, demuxed by table (B1), to
        ``out_dir/extract`` — the ``chunk*`` files;
-    2. A6/A9: distinct txns + max commit ts → one metrics row appended
-       to ``out_dir/metrics`` — the watermark advance, engine-side.
+    2. A6/A9: distinct txns + max commit ts, one aggregate collected to
+       the driver and published as the epoch's own file under
+       ``out_dir/metrics`` — the watermark advance.  A replayed epoch
+       (at-least-once ``foreachBatch``) overwrites its row.
+
+    ``on_epoch``, if given, receives each metrics row this call
+    extracted, as a dict, in epoch order — the freshness of exactly
+    this pass, with no second read.
 
     ``tables`` is the monitored-group restriction (-Dtables,
     ``Config.java:8-27``) applied as an ``In`` filter on the stream —
@@ -169,23 +213,23 @@ def run_cdc_pipeline(
     extract_dir = os.path.join(out_dir, "extract")
     metrics_dir = os.path.join(out_dir, "metrics")
     checkpoint_dir = os.path.join(out_dir, "checkpoint")
+    os.makedirs(metrics_dir, exist_ok=True)
 
     def epoch_body(batch_df: DataFrame, epoch_id: int) -> None:
         write_pipe_text(
             batch_df, extract_dir, partition_by="table_name", mode="append"
         )
-        (
-            batch_df.agg(
-                F.lit(epoch_id).cast("long").alias("epoch_id"),
-                F.min("event_id").alias("min_event_id"),
-                F.max("event_id").alias("max_event_id"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.countDistinct("transaction_id").alias("n_txns"),
-                F.max("commit_ts_ms").alias("uptodate_ms"),
-            )
-            .write.mode("append")
-            .parquet(metrics_dir)
-        )
+        agg = batch_df.agg(
+            F.min("event_id").alias("min_event_id"),
+            F.max("event_id").alias("max_event_id"),
+            F.count(F.lit(1)).alias("n_rows"),
+            F.countDistinct("transaction_id").alias("n_txns"),
+            F.max("commit_ts_ms").alias("uptodate_ms"),
+        ).first()
+        row = {"epoch_id": epoch_id, **agg.asDict()}
+        _publish_epoch_metrics(metrics_dir, row)
+        if on_epoch is not None:
+            on_epoch(row)
 
     stream = read_change_stream(spark, feed_dir)
     if tables:
@@ -215,7 +259,10 @@ def run_observed_staleness(
 
     Returns one dict per epoch: observed row count, max commit ts, and
     the staleness lag against the fixed ``now_ms`` (determinism rule:
-    never wall clock).  Driver-side cost is O(epochs).
+    never wall clock).  Driver-side cost is O(epochs).  This is a
+    standalone monitor over the whole feed; the ``run`` CLI does not
+    start it, and reads staleness off ``run_cdc_pipeline``'s own epoch
+    rows instead.
     """
     checkpoint_dir = os.path.join(out_dir, "obs_checkpoint")
     observed = read_change_stream(spark, feed_dir).observe(

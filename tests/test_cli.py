@@ -3,6 +3,12 @@ process launch (`Client.java:11-49`) re-expressed; see __main__.py."""
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
+
+import pytest
+
 from cdc_extractor_spark.__main__ import main
 
 
@@ -52,3 +58,97 @@ def test_cli_explain_prints_physical_plan(spark, capsys):
     assert "== Physical Plan ==" in out
     assert "Scan parquet" in out
     assert main(["explain", "no_such_query"]) == 2
+
+
+_EPOCH = re.compile(r"^epoch=(\d+) .* uptodate_ms=(\S+)$", re.M)
+_STALE = re.compile(r"^staleness batch=(\d+) rows=(\d+) lag_ms=(-?\d+)$", re.M)
+
+
+@pytest.fixture(scope="module")
+def staged(spark, sf_dir, tmp_path_factory):
+    """Three feed batch dirs, written once; tests publish them into a
+    feed dir one by one (copies keep the stamped arrival order)."""
+    from cdc_extractor_spark.sources.changes import changes_df
+    from cdc_extractor_spark.streaming.pipeline import write_feed_batches
+
+    stage = str(tmp_path_factory.mktemp("stage"))
+    write_feed_batches(changes_df(spark, sf_dir), stage, 3)
+    return stage
+
+
+def _publish(stage: str, feed: str, i: int) -> None:
+    name = f"batch_{i:05d}"
+    shutil.copytree(os.path.join(stage, name), os.path.join(feed, name))
+
+
+def test_cli_run_is_one_pass_with_driver_side_history(
+    spark, staged, tmp_path, capsys, monkeypatch
+):
+    """Each `run` is one streaming query; it prints the full epoch
+    history, staleness for only the epochs it extracted, and an idle
+    poll schedules no Spark job."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    started = []
+    start = DataStreamWriter.start
+
+    def counting_start(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", counting_start)
+    feed, out = str(tmp_path / "feed"), str(tmp_path / "out")
+    argv = ["run", "--feed", feed, "--out", out, "--workers", "4",
+            "--tables", "customer,orders"]
+    for i in range(2):
+        _publish(staged, feed, i)
+    assert main(argv) == 0
+    capsys.readouterr()
+
+    _publish(staged, feed, 2)
+    started.clear()
+    assert main(argv) == 0
+    out2 = capsys.readouterr().out
+    assert len(started) == 1
+    epochs = {int(e): v for e, v in _EPOCH.findall(out2)}
+    assert sorted(epochs) == [0, 1, 2]
+    now_ms = max(int(v) for v in epochs.values() if v != "None")
+    stale = _STALE.findall(out2)
+    assert [int(b) for b, _, _ in stale] == [2]
+    for b, _, lag in stale:
+        assert int(lag) == now_ms - int(epochs[int(b)])
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    started.clear()
+    assert main(argv) == 0
+    out3 = capsys.readouterr().out
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert len(started) == 1
+    assert tracker.getJobIdsForGroup(str(started[0].runId)) == []
+    assert sorted(int(e) for e, _ in _EPOCH.findall(out3)) == [0, 1, 2]
+    assert not _STALE.findall(out3)
+
+
+def test_replayed_epoch_keeps_one_metrics_row(spark, staged, tmp_path):
+    """foreachBatch is at-least-once: an epoch whose commit was lost is
+    replayed on restart, and its metrics row must be replaced, not
+    appended a second time."""
+    from cdc_extractor_spark.streaming.pipeline import run_cdc_pipeline
+
+    feed, out = str(tmp_path / "feed"), str(tmp_path / "out")
+    for i in range(2):
+        _publish(staged, feed, i)
+    first = {r["epoch_id"]: r for r in run_cdc_pipeline(spark, feed, out).collect()}
+    assert sorted(first) == [0, 1]
+    commits = os.path.join(out, "checkpoint", "commits")
+    # drop the commit and its local-FS checksum together: an orphan
+    # .crc makes Spark's rewrite of the commit file fail
+    for name in ("1", ".1.crc"):
+        os.remove(os.path.join(commits, name))
+    replayed: list[dict] = []
+    again = run_cdc_pipeline(spark, feed, out, on_epoch=replayed.append).collect()
+    assert [r["epoch_id"] for r in replayed] == [1]
+    assert sorted(r["epoch_id"] for r in again) == [0, 1]
+    assert {r["epoch_id"]: r for r in again} == first

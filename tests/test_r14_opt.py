@@ -52,9 +52,10 @@ class TestOrderBasketsWhaleGuard:
 
 class TestExactSubstringSpillSafeForm:
     def test_degenerate_shared_window_matches_reference(self, spark):
-        """ADVICE r13 (medium): the r14 form aggregates only a COUNT
-        per window text (fixed-size, spill-safe buffer) and joins the
-        flag back — under a degenerate boilerplate window shared by
+        """ADVICE r13 (medium): the r14 form flags shared windows with
+        ``count().over(partitionBy(w))`` riding the dedupe's exchange
+        (a fixed-size, spill-safe per-row result, no collect_list and
+        no join) — under a degenerate boilerplate window shared by
         many documents the results must equal the brute-force
         reference exactly."""
         import hashlib
