@@ -88,6 +88,13 @@ def _stream_canary(spark) -> list[float]:
     return reps
 
 
+def _codegen_compiles(spark) -> int:
+    """Janino compiles so far in this JVM: the count of Spark's
+    codegen compilation-time histogram, one sample per cache miss."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def main() -> None:
     from cdc_extractor_spark.queries import QUERIES
     from cdc_extractor_spark.session import get_session
@@ -110,19 +117,25 @@ def main() -> None:
     # jobs, so a single rep is exposed to GC/host noise; min-of-2 is
     # the steady-state per-query cost.  Both reps are recorded
     # (BENCH_DETAIL.md) so host noise is separable from regression
-    # per-query, not just in aggregate.
+    # per-query, not just in aggregate.  Each rep also records its
+    # codegen compiles: a non-zero rep-2 count marks a query whose
+    # generated code differs between builds.
     import gc
 
     timings: dict[str, float] = {}
     reps: dict[str, list[float]] = {}
+    compiles: dict[str, list[int]] = {}
     for name in sorted(QUERIES):
         fn = QUERIES[name]
         reps[name] = []
+        compiles[name] = []
         for _ in range(2):
+            c0 = _codegen_compiles(spark)
             t0 = time.perf_counter()
             df = fn(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             reps[name].append(round(time.perf_counter() - t0, 3))
+            compiles[name].append(_codegen_compiles(spark) - c0)
         timings[name] = min(reps[name])
         # drop plan/py4j references so the ContextCleaner can release
         # localCheckpoint RDDs (iterative queries) before the next
@@ -148,9 +161,12 @@ def main() -> None:
     # cpu-count-tagged copy (BENCH_DETAIL_c{N}.md), so a scaling run at
     # a different $SPARK_GRAFT_CPUS no longer clobbers the primary
     # core-count's table — both stay on disk after a scaling session.
-    # Stdout contract unchanged (two JSON lines, summary last).
+    # Stdout contract unchanged (two JSON lines, summary last).  The
+    # cpus tag is read from the live session, so a master override is
+    # labeled by what actually ran.
     try:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        sc = spark.sparkContext
+        cpus = sc.defaultParallelism
         detail = Path(__file__).resolve().parent / "BENCH_DETAIL.md"
         detail_cn = Path(__file__).resolve().parent / f"BENCH_DETAIL_c{cpus}.md"
         lines = [
@@ -158,6 +174,8 @@ def main() -> None:
             "",
             f"sf={sf}  queries={len(timings)}  total={total}s  "
             f"(min of 2 reps, noop sink; sorted slowest first)",
+            "",
+            f"cpus={cpus} ({sc.master})",
             "",
             f"canary (1-row constant query, pure harness overhead): "
             f"first={canary['first']}  last={canary['last']}  "
@@ -202,13 +220,20 @@ def main() -> None:
             "> an inflated canary; a UNIFORM shift including the heavy",
             "> queries with a flat canary is code and gets bisected.",
             "",
-            "| query | sec | rep1 | rep2 |",
-            "|---|---|---|---|",
+            "> compiles1/compiles2: codegen classes compiled during each",
+            "> rep.  With the session's codegen cache sized to the",
+            "> registry, a non-zero compiles2 means the query's generated",
+            "> code differs between builds.",
+            "",
+            "| query | sec | rep1 | rep2 | compiles1 | compiles2 |",
+            "|---|---|---|---|---|---|",
         ]
         for name, sec in sorted(timings.items(), key=lambda kv: (-kv[1], kv[0])):
             r1, r2 = reps[name]
-            lines.append(f"| {name} | {sec:.3f} | {r1:.3f} | {r2:.3f} |")
-        lines.insert(3, f"cpus={cpus} (local[{cpus}])")
+            c1, c2 = compiles[name]
+            lines.append(
+                f"| {name} | {sec:.3f} | {r1:.3f} | {r2:.3f} | {c1} | {c2} |"
+            )
         body = "\n".join(lines) + "\n"
         detail.write_text(body)
         detail_cn.write_text(body)

@@ -10,6 +10,19 @@ test runs.  On a real cluster the same builder is used with
 ``master=yarn/k8s``; the only per-job knobs we set are AQE (on), shuffle
 partitions (cluster-sized), and Arrow (on, for the pandas-UDF paths).
 Nothing in the engine assumes local mode.
+
+Codegen cache: ``get_session`` sets the STATIC conf
+``spark.sql.codegen.cache.maxEntries`` to ``CODEGEN_CACHE_ENTRIES``
+(4096) on the builder.  Spark's default keeps 100 compiled generated
+classes; one pass over the 277 non-streaming registry queries at sf0.001
+generates about 3,300 distinct classes (the 8-query ``registry_floor``
+loop needs 142), so a long-lived session at the default evicts and
+recompiles most of its working set every pass — Janino on the driver,
+then HotSpot JIT again for the new classes.  A static conf is fixed
+when the first session in the JVM starts, so it cannot live in
+``runtime_sql_confs()``, which is reapplied to live sessions.  A
+caller-built session keeps whatever cap it started with; query results
+do not depend on the cap, only compile work does.
 """
 
 from __future__ import annotations
@@ -19,6 +32,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def runtime_sql_confs() -> dict[str, str]:
@@ -30,7 +44,13 @@ def runtime_sql_confs() -> dict[str, str]:
     r6 driver window lost ``source_python_datasource_scan`` to exactly
     such a gap (pushFilters needs the filterPushdown conf the driver
     never set).  Add new confs HERE, not inline in ``get_session``,
-    or the driver-sim stops being faithful."""
+    or the driver-sim stops being faithful.
+
+    Static confs (fixed when the first session starts) cannot go here: they
+    throw when set on a live session.  ``spark.sql.codegen.cache.maxEntries``
+    is one — it sits on the builder in ``get_session``, sized from the
+    ~3,300 classes one pass over the registry compiles; a caller-built
+    session keeps its own cap, which changes compile work, not results."""
     return {
         "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
         "spark.sql.adaptive.enabled": "true",
@@ -67,12 +87,15 @@ def get_session(
       (naive-UTC) and is stable across machines.
     - Arrow enabled for the vectorized pandas-UDF paths (similarity,
       multimodal) — the only places Python touches row data.
+    - Codegen cache sized to the registry's working set (module
+      docstring), so a long-lived session compiles each class once.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     sql_confs = runtime_sql_confs()
