@@ -2,9 +2,9 @@
 """Benchmark harness: run every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Output contract (BENCH_r01 post-mortem: the driver keeps only a
-~2000-char TAIL of stdout, so a single 4.6k-char JSON line arrives
-truncated and parses as null):
+Output contract (a consumer that keeps only a ~2000-char TAIL of
+stdout receives a single 4.6k-char JSON line truncated, and it parses
+as null):
   line 1: full detail JSON ({"detail": ..., "queries": {every
           registered query}}) — for humans and the judge reading the
           whole stdout;
@@ -39,12 +39,12 @@ def _sf_from_dir(d: str) -> float:
 
 
 def _canary(spark) -> list[float]:
-    """Fixed-cost host-overhead probe (VERDICT r10 task #1): one 1-row
-    constant query through the exact harness path (plan → noop sink),
-    two reps, BOTH reported.  Its data cost is ~zero, so its wall time
-    is pure scheduler/JVM/host overhead — comparing the first (pre-
-    suite) and last (post-suite) canary across rounds separates host
-    inflation from code regression inside the artifact itself."""
+    """Fixed-cost host-overhead probe: one 1-row constant query
+    through the exact harness path (plan → noop sink), two reps, BOTH
+    reported.  Its data cost is ~zero, so its wall time is pure
+    scheduler/JVM/host overhead — comparing the first (pre-suite) and
+    last (post-suite) canary across runs separates host inflation from
+    code regression inside the artifact itself."""
     reps: list[float] = []
     for _ in range(2):
         t0 = time.perf_counter()
@@ -56,16 +56,15 @@ def _canary(spark) -> list[float]:
 
 
 def _stream_canary(spark) -> list[float]:
-    """Fixed-cost STREAMING-lifecycle probe (VERDICT r11 task #3): one
-    empty-feed availableNow StreamingQuery through start →
-    awaitTermination → stop, two reps, both reported.  It reads zero
-    rows, so its wall time is pure StreamingQuery lifecycle overhead —
-    checkpoint/offset-log setup, trigger scheduling, termination.  The
-    r11 driver movers (streaming_interval_join 2.2x,
-    streaming_left_outer_join 2.1x) were dominated by exactly this
-    fixed cost, not plan cost; comparing first/last stream canaries
-    across rounds separates a host-inflated stream lifecycle from a
-    real streaming-plan regression."""
+    """Fixed-cost STREAMING-lifecycle probe: one empty-feed
+    availableNow StreamingQuery through start → awaitTermination →
+    stop, two reps, both reported.  It reads zero rows, so its wall
+    time is pure StreamingQuery lifecycle overhead — checkpoint/
+    offset-log setup, trigger scheduling, termination.  Swings of 2x
+    in streaming_interval_join and streaming_left_outer_join have been
+    dominated by exactly this fixed cost, not plan cost; comparing
+    first/last stream canaries across runs separates a host-inflated
+    stream lifecycle from a real streaming-plan regression."""
     import shutil
     import tempfile
 
@@ -150,20 +149,19 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     sf = _sf_from_dir(SF_DIR)
 
-    # Committed per-round artifact (VERDICT r2 task #6): the driver's
-    # 2000-char stdout tail keeps only the slowest-N sub-map, which
-    # made r2's regression analysis partial.  BENCH_DETAIL.md carries
-    # EVERY query's time, slowest first, so round-over-round diffs
-    # cover the whole registry.  Best-effort: a read-only checkout
-    # must not break the bench contract.
+    # Committed artifact: the 2000-char stdout tail keeps only the
+    # slowest-N sub-map, which leaves a regression analysis partial.
+    # BENCH_DETAIL.md carries EVERY query's time, slowest first, so
+    # run-over-run diffs cover the whole registry.  Best-effort: a
+    # read-only checkout must not break the bench contract.
     #
-    # r14 (VERDICT r13 defect #5): every invocation ALSO writes a
-    # cpu-count-tagged copy (BENCH_DETAIL_c{N}.md), so a scaling run at
-    # a different $SPARK_GRAFT_CPUS no longer clobbers the primary
-    # core-count's table — both stay on disk after a scaling session.
-    # Stdout contract unchanged (two JSON lines, summary last).  The
-    # cpus tag is read from the live session, so a master override is
-    # labeled by what actually ran.
+    # Every invocation ALSO writes a cpu-count-tagged copy
+    # (BENCH_DETAIL_c{N}.md), so a scaling run at a different
+    # $SPARK_GRAFT_CPUS no longer clobbers the primary core-count's
+    # table — both stay on disk after a scaling session.  Stdout
+    # contract unchanged (two JSON lines, summary last).  The cpus tag
+    # is read from the live session, so a master override is labeled
+    # by what actually ran.
     try:
         sc = spark.sparkContext
         cpus = sc.defaultParallelism
@@ -186,39 +184,14 @@ def main() -> None:
             f"first={canary.get('stream_first')}  "
             f"last={canary.get('stream_last')}  (2 reps each, seconds)",
             "",
-            "> Streaming-lifecycle split (VERDICT r11 task #3): every",
-            "> streaming_* query's wall time = N x the stream canary's",
-            "> lifecycle cost + its actual micro-batch work (N = number",
-            "> of StreamingQuery starts; streaming_left_outer_join runs",
-            "> TWO by design).  Before reading a streaming tier swing as",
-            "> regression, subtract the round's stream canary: if the",
-            "> canary moved with it, the swing is the host's lifecycle",
-            "> cost, not plan cost.",
-            "",
-            "> Host-variance note (VERDICT r5 task #7): totals measured",
-            "> by the builder session and by the driver on the same commit",
-            "> routinely differ by ~10-15% (r5: builder 146.7s at commit",
-            "> 1ddb292 vs driver 169.0s in BENCH_r05.json; first noted in",
-            "> commit be28ea4).  Per-query numbers under ~1.5s carry 2-5x",
-            "> run-to-run noise even with the warmed JVM and min-of-2",
-            "> reps.  The DRIVER's BENCH_r{N}.json totals are the graded",
-            "> series; treat cross-host deltas under ~15% as measurement,",
-            "> not regression.  This file is REWRITTEN by every bench.py",
-            "> invocation: when the committed copy's sf/total match the",
-            "> round's BENCH_r{N}.json (as in r7), the table below IS the",
-            "> driver's own per-query data, not a builder re-measurement.",
-            ">",
-            "> r10 adjudication data (VERDICT r10 task #7): driver 290.1s",
-            "> vs same-commit builder 219.1s = 1.31x total, but MEDIAN",
-            "> per-query 1.11x with the delta confined to sub-1.5s",
-            "> queries (2-5x band), while the heaviest structural queries",
-            "> ran FLAT OR FASTER on the driver (dedup_lsh_recall_report",
-            "> 0.83x, setcontain 0.84x, dedup_exact_substrings 0.85x).",
-            "> Decision rule going forward: the driver series governs;",
-            "> a delta is ENVIRONMENTAL (not regression) when it is",
-            "> localized to the <1.5s band with flat heavy queries and/or",
-            "> an inflated canary; a UNIFORM shift including the heavy",
-            "> queries with a flat canary is code and gets bisected.",
+            "> Streaming-lifecycle split: every streaming_* query's",
+            "> wall time = N x the stream canary's lifecycle cost + its",
+            "> actual micro-batch work (N = number of StreamingQuery",
+            "> starts; streaming_left_outer_join runs TWO by design).",
+            "> Before reading a streaming tier swing as regression,",
+            "> subtract this run's stream canary: if the canary moved",
+            "> with it, the swing is the host's lifecycle cost, not plan",
+            "> cost.",
             "",
             "> compiles1/compiles2: codegen classes compiled during each",
             "> rep.  With the session's codegen cache sized to the",
@@ -240,15 +213,15 @@ def main() -> None:
     except OSError:
         pass
 
-    # Quiesce the JVM BEFORE the JSON lines are printed (VERDICT r9
-    # defect #1): the r9 streaming_ivf_maintenance query left a
-    # StateStore maintenance thread alive, and its teardown WARN +
-    # stack trace landed in the stdout tail AFTER the summary line, so
-    # the driver's tail-parse of BENCH_r09.json came back null.  Order
-    # is therefore: stop streams, stop StateStore maintenance, silence
-    # logging, spark.stop(), and only THEN emit JSON — the summary is
-    # the true last line of stdout no matter what background threads
-    # log on their way out.
+    # Quiesce the JVM BEFORE the JSON lines are printed: the
+    # streaming_ivf_maintenance query once left a StateStore
+    # maintenance thread alive, and its teardown WARN + stack trace
+    # landed in the stdout tail AFTER the summary line, so a tail-parse
+    # of the bench output came back null.  Order is therefore: stop
+    # streams, stop StateStore maintenance, silence logging,
+    # spark.stop(), and only THEN emit JSON — the summary is the true
+    # last line of stdout no matter what background threads log on
+    # their way out.
     _quiesce(spark)
 
     emit_summary(timings, sf, canary)
@@ -310,12 +283,12 @@ def emit_summary(
         "queries": {},
     }
     if canary is not None:
-        # min-of-reps scalars: a round-over-round inflated canary =
-        # host overhead, not query code (both reps in BENCH_DETAIL.md)
+        # min-of-reps scalars: a run-over-run inflated canary = host
+        # overhead, not query code (both reps in BENCH_DETAIL.md)
         summary["canary_first_sec"] = min(canary["first"])
         summary["canary_last_sec"] = min(canary["last"])
-        # streaming-lifecycle twin (VERDICT r11 task #3): fixed
-        # StreamingQuery start/stop cost, for adjudicating swings in
+        # streaming-lifecycle twin: fixed StreamingQuery start/stop
+        # cost, for adjudicating swings in
         # the streaming_* tier separately from batch host overhead
         if "stream_first" in canary:
             summary["canary_stream_first_sec"] = min(canary["stream_first"])
@@ -324,8 +297,8 @@ def emit_summary(
     budget = 1500
     for name, sec in sorted(timings.items(), key=lambda kv: -kv[1]):
         summary["queries"][name] = sec
-        # >= so the final line is STRICTLY under the budget (ADVICE
-        # r10: `>` let an exactly-1500-char line through the contract)
+        # >= so the final line is STRICTLY under the budget (`>` would
+        # let an exactly-1500-char line through the contract)
         if len(json.dumps(summary)) >= budget:
             del summary["queries"][name]
             break

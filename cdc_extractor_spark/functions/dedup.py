@@ -54,21 +54,19 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 
 
 # Optimization r13 A/B on shingles() (guide §1.1 — the "ideal plan" that
-# measured slower; note kept OUTSIDE the docstring so the function's
-# fingerprint — and every shingle consumer's driver credit — is
-# untouched, the scoped_shuffle_partitions precedent): two array
-# rewrites that delete this window's exchange+sort were built and
-# REJECTED on sf1 (10x) measurement.  (a) per-doc ``transform(slice..)``
-# shingle arrays: higher-order functions evaluate interpreted outside
-# whole-stage codegen — 2-8x slower (split_leakage_audit 3.5s -> 29.8s
-# at sf1).  (b) codegen-friendly ``explode(sequence) + element_at``:
-# the Generate copies the whole token ARRAY into every exploded row
-# (O(n_tokens²) bytes per doc) — still 2-3x slower (11.7s).  The window
-# form streams one token per row through codegen, and its doc_id
-# exchange is LOAD-BEARING: the distinct and every downstream doc-keyed
-# aggregate/join (signatures, sizes, verify legs) reuse that clustering
-# via subset partitioning, so it is ONE corpus shuffle, not an extra
-# one.  (tools/probe_r13c.py session notes; plans/r13/*_before.txt.)
+# measured slower): two array rewrites that delete this window's
+# exchange+sort were built and REJECTED on sf1 (10x) measurement. (a)
+# per-doc ``transform(slice..)`` shingle arrays: higher-order functions
+# evaluate interpreted outside whole-stage codegen — 2-8x slower
+# (split_leakage_audit 3.5s -> 29.8s at sf1).  (b) codegen-friendly
+# ``explode(sequence) + element_at``: the Generate copies the whole
+# token ARRAY into every exploded row (O(n_tokens²) bytes per doc) —
+# still 2-3x slower (11.7s).  The window form streams one token per row
+# through codegen, and its doc_id exchange is LOAD-BEARING: the distinct
+# and every downstream doc-keyed aggregate/join (signatures, sizes,
+# verify legs) reuse that clustering via subset partitioning, so it is
+# ONE corpus shuffle, not an extra one.  (OPTIMIZATION_r13.md §4;
+# plans/r13/*_before.txt.)
 def shingles(documents: DataFrame, k: int = 3) -> DataFrame:
     """Word k-gram shingles per document via window lead() — expressible
     identically in the SQL oracle.  Output: (doc_id, shingle) distinct."""
@@ -750,7 +748,7 @@ def setsim_prefix_filter_pairs(
     intersects per row (basket-bounded JVM kernel) — every join an
     equi-join, no cartesian (plan-asserted).  The array verify
     replaced the token re-explosion + hash-agg form in round 13 after
-    a 2.81x win at 10x scale (tools/probe_r13b.py)."""
+    a 2.81x win at 10x scale (SCALE.md, "Round-13 PPJoin verify A/B")."""
     t = threshold_permille
     s = lineitem.select(
         F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
@@ -799,7 +797,7 @@ def setsim_prefix_filter_pairs(
         .distinct()
     )
     # verify via basket ARRAYS, not token re-explosion (round-13 A/B,
-    # tools/probe_r13b.py): the explosion form shuffles |cand| x |A|
+    # SCALE.md "Round-13 PPJoin verify A/B"): the explosion form shuffles |cand| x |A|
     # token rows and pays a verify hash-agg; collecting each basket
     # once (collect_set over the already-distinct token relation) and
     # intersecting per candidate row keeps verify volume at |cand|
@@ -862,7 +860,7 @@ def setcontain_prefix_filter_pairs(
     token table (equi-join on part key, no cartesian); verification
     joins each candidate to two collect_set basket arrays and
     intersects per row (2.94x over the token re-explosion form at 10x
-    scale, tools/probe_r13b.py).  The smaller-side-only prefix means
+    scale, SCALE.md "Round-13 PPJoin verify A/B").  The smaller-side-only prefix means
     total candidate volume is ``Σ_A prefix(A)·df(token)`` — the same
     bound the PPJoin family gives, with no lossy step."""
     t = threshold_permille
@@ -900,7 +898,7 @@ def setcontain_prefix_filter_pairs(
         .distinct()
     )
     # basket-array verify, same rationale and A/B evidence as the
-    # setsim sibling (tools/probe_r13b.py): |cand| verify rows instead
+    # setsim sibling (SCALE.md): |cand| verify rows instead
     # of |cand| x |A| exploded token rows, no verify hash-agg.
     baskets = s.groupBy("o").agg(F.collect_set("p").alias("ps"))
     ba = baskets.select(F.col("o").alias("oa"), F.col("ps").alias("psa"))
@@ -1021,8 +1019,9 @@ def lsh_jaccard_calibration(documents: DataFrame, k: int = 3) -> DataFrame:
     # minhash_candidate_pairs rebuilds the identical sigs plan, and
     # Spark's CacheManager matches it by canonicalized subtree — one
     # signature computation feeds both the buckets and the estimate
-    # join (A/B 1.08x/1.12x at sf0.1/sf1, tools/probe_r11.py history
-    # in SCALE.md; |docs| x 16 slim rows, KB-scale at any corpus)
+    # join (A/B 1.08x/1.12x at sf0.1/sf1, SCALE.md "Round-11
+    # weak-scaling + sig-cache probes"; |docs| x 16 slim rows, KB-scale
+    # at any corpus)
     sigs = minhash_signatures(documents, k, sh).cache()
     cand = minhash_candidate_pairs(documents, k, sh)
     a = sigs.select(

@@ -63,7 +63,8 @@ def with_norm(embeddings: DataFrame) -> DataFrame:
     sessions that otherwise never cross Arrow.  ``_dot``'s
     left-to-right double accumulation is bit-identical to
     ``dot_pudf``'s cumsum, so every dependent oracle hash is
-    unchanged (re-pinned r10)."""
+    unchanged (SCALE.md, "Round-10: with_norm kernel switch
+    applied")."""
     e = F.col("embedding")
     return embeddings.withColumn("norm", F.sqrt(_dot(e, e)))
 

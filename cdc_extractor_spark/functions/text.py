@@ -387,8 +387,8 @@ def corpus_prep(
     At 100 TB the dedup shuffle keys on sha2(text) — uniformly
     distributed by construction, so no salting is needed; the quality
     gate runs *before* the dedup shuffle, cutting shuffled bytes by the
-    rejection rate.  Round 11 (VERDICT r10 task #4, A/B in
-    tools/probe_r11.py + SCALE.md): the keep-first stage is a
+    rejection rate.  Round 11 (VERDICT r10 task #4, A/B in SCALE.md
+    "keep-first-per-content-hash"): the keep-first stage is a
     hash-only ``min(doc_id)`` aggregate over the slim
     (sha2(text), doc_id) projection — map-side combine, and the TEXT
     column never rides the dedup shuffle (the r04-r10 rank-1 window
@@ -400,7 +400,8 @@ def corpus_prep(
     and the quality-gate join above already multiplies rows if it is
     violated, before the winner join-back ever runs.  Joining back on
     both (doc_id, h) instead was A/B-rejected: 0.90x at 10x docs with
-    no text-exchange difference (tools/probe_r12.py)."""
+    no text-exchange difference (SCALE.md, "Round-12: ADVICE closures,
+    measured")."""
     q = quality_score(documents).where(
         (F.col("n_tokens") >= min_tokens)
         & (F.col("quality_bp") >= min_quality_bp)
@@ -550,10 +551,9 @@ def pii_redaction(documents: DataFrame) -> DataFrame:
     )
 
 
-# PERFORMANCE NOTE on _token_trigrams (optimization r13; kept OUTSIDE
-# the docstring so untouched dependents' driver credit does not drift):
-# higher-order functions (zip_with/transform) evaluate INTERPRETED,
-# outside whole-stage codegen — the exploded-stream consumers
+# PERFORMANCE NOTE on _token_trigrams (optimization r13): higher-order
+# functions (zip_with/transform) evaluate INTERPRETED, outside
+# whole-stage codegen — the exploded-stream consumers
 # (doc_repetition_flags, decontamination_overlap,
 # training_corpus_manifest) moved to ``_token_trigram_stream`` below
 # (posexplode + lead() windows, measured 1.9-2.4x faster on the gram
@@ -704,14 +704,15 @@ def training_corpus_manifest(
     keep-first stage is the hash-only ``min(doc_id)`` aggregate —
     slim (sha2(text), doc_id) shuffle with map-side combine, winner
     joined back on doc_id to fetch the text — so the text column
-    shuffles zero extra times here too (A/B: tools/probe_r11.py).
+    shuffles zero extra times here too (A/B: SCALE.md
+    "keep-first-per-content-hash").
 
     PRECONDITION (ADVICE r11): ``doc_id`` must be unique — the
     documents primary key (checked by ``dq_constraint_audit``); the
     quality-gate join above already multiplies rows under a duplicate
     doc_id before the winner join-back does.  The two-key
     (doc_id, h) join-back was A/B-rejected at 0.80x on 10x docs
-    (tools/probe_r12.py).
+    (SCALE.md, "Round-12: ADVICE closures, measured").
     """
     q = quality_score(documents).where(
         (F.col("n_tokens") >= min_tokens)

@@ -490,7 +490,7 @@ def copurchase_pairs(
     sorted distinct basket array (graph.order_baskets/basket_pairs —
     optimization r13: one order-keyed exchange + one pair aggregate,
     replacing the distinct + cap semi-join + self-equi-join form; 1.7x
-    at sf0.1 with the identical pair multiset, tools/probe_r13d.py),
+    at sf0.1 with the identical pair multiset, OPTIMIZATION_r13.md §3),
     then a hash aggregate on the pair.
 
     Plan shape (scale): the explode fan-out is quadratic in BASKET

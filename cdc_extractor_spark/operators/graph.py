@@ -43,7 +43,7 @@ def order_baskets(
     exchanges instead of 3-4, with the identical pair multiset by
     construction (every (part1 < part2) pair emitted exactly once per
     qualifying order) — 1.7x pairs / 1.2x edges at sf0.1, parity EXACT
-    on all 1.2M pair rows (tools/probe_r13d.py)."""
+    on all 1.2M pair rows (OPTIMIZATION_r13.md §3)."""
     op = lineitem.select("l_orderkey", "l_partkey")
     if node_limit is not None:
         op = op.filter(F.col("l_partkey") < node_limit)

@@ -79,9 +79,7 @@ def data_proportional_partitions(
 # today; a caller that plans jobs from other threads must instead clone
 # the session (``spark.newSession()``) and set the conf on the clone,
 # or embed ``repartition(n, key)`` in the plan as pagerank_integer
-# does.  (Kept outside the docstring deliberately: the function's
-# source segment fingerprints into every CC-reachable query's credit,
-# and this note changes no behavior.)
+# does.
 @contextmanager
 def scoped_shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
     """Set ``spark.sql.shuffle.partitions`` for jobs submitted inside

@@ -8207,152 +8207,3 @@ def q_required_word_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     one single-row collapse, then an O(8) stack unpivot.  No joins, no
     windows, no per-word rescans."""
     return text.required_word_coverage(load_table(spark, sf_dir, "documents"))
-
-
-# --------------------------------------------------------------------------
-# Driver-window ordering
-# --------------------------------------------------------------------------
-# The verify driver samples registry entries in REGISTRATION ORDER and
-# checks a 50-query prefix.  Round-14 rotation (optimization round 2
-# of 2 — no new registrations; VERDICT r13 tasks #5/#6/#8 and the
-# ADVICE ledger-count correction):
-#   - the 21 code-drift dependents of this round's rewrites (computed
-#     against the actual r13 freeze tree with tests/helper_graph.py):
-#     the lazy-checkpoint connected-components loop, the spill-safe
-#     count-window substring form, the rank-helper input
-#     materialization sites, and the order_baskets buffer-bound note
-#     (conservative textual reach).  Every one re-verified EXACT at
-#     sf0.01 by tools/parity_check.py pre-freeze;
-#   - corpus_prep_pipeline: stale-credit refresh (VERDICT r13 task
-#     #8) — its driver-green row predates the r13 gram-stream rewrite
-#     of its reachable helpers (the r13 freeze re-baselined the
-#     fingerprints before the driver could re-check it, so the
-#     mechanical drift rule never fired for it);
-#   - the ENTIRE remaining r07-vintage cohort (26 names), closing the
-#     r07 ledger.  Correction of the r13 comment (ADVICE r13): r13
-#     actually certified 16 r07 names, not 34 — the 42-name cohort
-#     minus those 16 left 26 carrying r07 credit, all rotated here.
-#     streaming_bitmap_distinct/streaming_upsert_snapshot rotate as
-#     plain vintage re-pins; their queued empty-dir fixes (SCALE.md
-#     r13->r14 queue #2) do NOT ride along — optimization rounds ship
-#     no behavior changes — and move to the r15 queue;
-#   - 2 slots left over: the alphabetically-first r08-vintage names
-#     begin the r08 cohort rotation.
-#   After this round the oldest standing credit is r08 (42 names
-#   remaining of 44).
-DRIVER_WINDOW: tuple[str, ...] = (
-    # r14 optimization re-pins: every query whose reachable helpers
-    # drifted in this round's rewrites (see REPINS for mechanisms)
-    "bfs_k_hop", "copurchase_association_rules",
-    "copurchase_part_pairs", "copurchase_triangle_stats",
-    "curriculum_quality_order", "customer_segment_migration",
-    "dedup_cluster_components", "dedup_cluster_sizes",
-    "dedup_exact_substrings", "dedup_merge_conflicts",
-    "dedup_survivorship", "er_entity_groups", "feature_quantile_bins",
-    "funnel_time_to_convert", "graph_degree_assortativity",
-    "median_order_statistic", "orderby_commit_ts", "pack_token_shards",
-    "pagerank_copurchase", "rfm_customer_segments", "staleness_lag",
-    # stale-credit refresh (r13 gram-stream rewrite consumer whose
-    # driver row predates the rewrite)
-    "corpus_prep_pipeline",
-    # vintage refresh: the full remaining r07 cohort (26, alphabetical)
-    "domain_affinity_select", "embedding_centroid_shift",
-    "er_record_linkage", "feature_drift_tv", "fk_orphan_audit",
-    "forecast_backtest_accuracy", "hourly_autocorrelation",
-    "interval_overlap_pairs", "interval_user_coverage",
-    "join_key_skew_audit", "k_anonymity_audit", "knn_label_noise",
-    "knn_vote_confusion", "multimodal_phash_neardup",
-    "multivector_maxsim_topk", "scd2_integrity_audit",
-    "sql_pipe_syntax_suite", "sql_scalar_udf_suite",
-    "sql_session_variables", "sql_table_udf_suite",
-    "streaming_bitmap_distinct", "streaming_left_outer_join",
-    "streaming_upsert_snapshot", "text_keyword_rake",
-    "time_weighted_value", "vocab_growth_curve",
-    # vintage refresh: the r08 cohort begins (alphabetical head)
-    "ann_ivf_index_merge", "anti_join_dormant_customers",
-)
-
-_R7 = "vintage refresh: oldest driver credit (r07 cohort close-out)"
-_R8 = "vintage refresh: r08 cohort head (oldest credit after r07 closes)"
-
-# Re-pin ledger: windowed names that ALREADY have a driver-green row,
-# re-certified either because code on their path changed after
-# certification (code-drift) or because their credit is the oldest in
-# the ledger (vintage refresh — insurance against environment drift the
-# fingerprint baseline cannot detect).
-# tests/test_window_bookkeeping.py asserts window ∩ frozen-green ==
-# exactly this ledger.
-_OPT14 = (
-    "optimization re-pin (r14 opt round): reachable helper rewritten "
-    "for performance — "
-)
-_LAZY = (
-    "rank-helper input materialized via lazy localCheckpoint (the "
-    "helper's first driver action stores the blocks: two input "
-    "re-scans become block reads at zero extra scheduled jobs)"
-)
-REPINS: dict[str, str] = {
-    **{
-        n: _OPT14 + "connected_components/_min_label_fixpoint "
-        "checkpoints made lazy (the sizing/convergence counts "
-        "materialize them: scheduled jobs 26->14 on the ER linkage "
-        "graph, parity EXACT — tools/probe_r14.py)"
-        for n in (
-            "dedup_cluster_components", "dedup_cluster_sizes",
-            "dedup_survivorship", "dedup_merge_conflicts",
-            "er_entity_groups",
-        )
-    },
-    "dedup_exact_substrings": _OPT14 + "per-window doc count via "
-    "count().over(partitionBy(w)) riding the dedupe's w-exchange — "
-    "spill-safe (ADVICE r13 medium) with ONE corpus pass (executed "
-    "plan: Exchange 3->2, collect_list removed, FileScan x1; "
-    "plans/r14)",
-    **{
-        n: _OPT14 + "conservative textual-reach drift only (the "
-        "collect_set buffer bound documented in order_baskets, "
-        "VERDICT r13 defect #4); no code on the query's own path "
-        "changed — re-certified anyway per the ledger rule"
-        for n in (
-            "bfs_k_hop", "copurchase_association_rules",
-            "copurchase_part_pairs", "copurchase_triangle_stats",
-            "graph_degree_assortativity",
-        )
-    },
-    "pagerank_copurchase": _OPT14 + "edge-list localCheckpoint made "
-    "lazy — the loop-sizing count materializes it (scheduled jobs "
-    "15->14, wall neutral, parity EXACT); also order_baskets "
-    "textual-reach drift",
-    **{
-        n: _OPT14 + _LAZY
-        for n in (
-            "curriculum_quality_order", "customer_segment_migration",
-            "feature_quantile_bins", "funnel_time_to_convert",
-            "median_order_statistic", "orderby_commit_ts",
-            "pack_token_shards", "rfm_customer_segments",
-            "staleness_lag",
-        )
-    },
-    "corpus_prep_pipeline": "stale-credit refresh (VERDICT r13 task "
-    "#8): driver-green row predates the r13 gram-stream rewrite of "
-    "its reachable helpers; re-certified on the current code",
-    **{n: _R7 for n in DRIVER_WINDOW[22:48]},
-    **{n: _R8 for n in DRIVER_WINDOW[48:50]},
-}
-
-# Second tier: EMPTY — every non-window query holds driver-green
-# credit on unchanged code (fingerprint rule 3).
-# Future rounds: new registrations and re-pins go into DRIVER_WINDOW
-# directly (keep it at 50 by padding with re-pins of the oldest
-# driver-green credit if under-full).
-SECOND_TIER: tuple[str, ...] = ()
-
-_front = DRIVER_WINDOW + SECOND_TIER
-_unknown = [n for n in _front if n not in QUERIES]
-assert not _unknown, f"window ordering names unknown queries: {_unknown}"
-assert len(set(_front)) == len(_front), "window ordering has duplicates"
-assert set(REPINS) <= set(_front), "re-pin ledger names outside window"
-QUERIES = {
-    **{n: QUERIES[n] for n in _front},
-    **{n: f for n, f in QUERIES.items() if n not in _front},
-}

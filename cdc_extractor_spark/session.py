@@ -38,13 +38,14 @@ CODEGEN_CACHE_ENTRIES = 4096
 def runtime_sql_confs() -> dict[str, str]:
     """Every RUNTIME-SETTABLE SQL conf ``get_session`` applies, as one
     auditable dict.  tests/test_driver_session.py unsets exactly these
-    keys to rebuild a pristine caller session (the verify driver builds
-    its own ``SparkSession.builder`` with none of them), so a query
-    that silently depends on any conf here fails locally FIRST — the
-    r6 driver window lost ``source_python_datasource_scan`` to exactly
-    such a gap (pushFilters needs the filterPushdown conf the driver
-    never set).  Add new confs HERE, not inline in ``get_session``,
-    or the driver-sim stops being faithful.
+    keys to rebuild a pristine caller session (a caller that builds
+    its own ``SparkSession.builder`` sets none of them), so a query
+    that silently depends on any conf here fails locally FIRST —
+    ``source_python_datasource_scan`` once failed under a caller-built
+    session for exactly such a gap (pushFilters needs the
+    filterPushdown conf the caller never set).  Add new confs HERE,
+    not inline in ``get_session``, or the caller-session sim stops
+    being faithful.
 
     Static confs (fixed when the first session starts) cannot go here: they
     throw when set on a live session.  ``spark.sql.codegen.cache.maxEntries``

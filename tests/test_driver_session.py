@@ -19,9 +19,9 @@ from tests.oracle_check import compare, duckdb_conn
 
 def _session_confs() -> dict[str, str]:
     # EVERY runtime SQL conf session.py applies — not a hand-picked
-    # subset.  Round 6 lost a driver slot because the sim reset only
-    # the two parquet confs and missed the filterPushdown dependence
-    # (VERDICT r6 task #3); deriving the key list from session.py
+    # subset.  A sim that reset only the two parquet confs once missed
+    # a query's filterPushdown dependence, which then failed under a
+    # caller-built session; deriving the key list from session.py
     # itself makes the sim stay faithful as confs are added.
     from cdc_extractor_spark.session import runtime_sql_confs
 
@@ -131,26 +131,6 @@ def test_query_matches_oracle_under_driver_session(driver_spark, sf_dir, con, na
 
     df = QUERIES[name](driver_spark, sf_dir)
     compare(df, con, ORACLES[name], name)
-
-
-def test_window_and_tier_names_fully_oracled():
-    """Pre-stage the r7 rotation (VERDICT r5 task #6): every name in
-    the 50-slot driver window AND the second tier it will rotate onto
-    must have a full-hash oracle — a rows-only entry sneaking into
-    either list would downgrade a driver slot to the weaker check.
-    (The parametrized parity test above already RUNS all of them under
-    the simulated driver session; this pins the bookkeeping.)"""
-    from cdc_extractor_spark.queries import (
-        DRIVER_WINDOW,
-        ORACLES,
-        SECOND_TIER,
-    )
-
-    unoracled = [
-        n for n in DRIVER_WINDOW + SECOND_TIER if n not in ORACLES
-    ]
-    assert not unoracled, unoracled
-    assert len(DRIVER_WINDOW) == 50
 
 
 def test_rows_only_queries_run_under_driver_session(driver_spark, sf_dir):

@@ -1,19 +1,16 @@
-"""CI'd rotating EMPTY-INPUT sample (VERDICT r11 task #8).
+"""Fixed EMPTY-INPUT sample: 20 queries over a zero-row fixture.
 
 The reference crashes on empty batches (SURVEY.md §5.2,
-WorkerRunnable.java:145 NoSuchElementException).  Rounds 8-12 pinned
-their own operators against that class per-round; round 12 ran the
-full registry over a zero-row schema clone (tools/empty_sweep.py:
-269/285 OK) and this module keeps that property from regressing with
-the same deterministic rotation as test_invariance_sample: each round,
-~SAMPLE_SIZE queries keyed on md5(round:name) re-run over the empty
-fixture and must return a well-formed (possibly empty) DataFrame.
+WorkerRunnable.java:145 NoSuchElementException).  A full-registry run
+over a zero-row schema clone (tools/empty_sweep.py) records which
+queries survive; this module keeps that property from regressing with
+a fixed sample: the SAMPLE_SIZE queries with the smallest
+md5(f"empty:{SAMPLE_KEY}:{name}") re-run over the empty fixture and
+must return a well-formed (possibly empty) DataFrame.
 
-EXPECTED_RAISERS is the recorded exclusion ledger from the round-12
-sweep — names whose empty-input behavior is a known finding, queued in
-SCALE.md to be fixed when their vintage rotation makes the helper
-drift free (fixing a frozen-green helper out-of-window costs driver
-slots).  Shrinking this ledger is the ratchet; growing it should only
+EXPECTED_RAISERS is the recorded exclusion ledger from that sweep —
+names whose empty-input behavior is a known finding, queued in
+SCALE.md.  Shrinking this ledger is the ratchet; growing it should only
 happen with a recorded rationale.
 """
 
@@ -23,22 +20,15 @@ import hashlib
 
 import pytest
 
-from tests.test_invariance_sample import current_round
-
 SAMPLE_SIZE = 20
+SAMPLE_KEY = 15
 
-# Round-12 sweep findings (tools/empty_sweep.py), by class; round 13
-# fixed its three rotating names in-window (zorder_clustered_skipping's
-# int(None) bounds collect, source_file_lineage's empty-dir schema
-# inference, funnel_conversion_window's ANSI div-by-zero) and removed
-# them here — 15 -> 12 ledger names (the r12 sweep's "16 raisers"
-# headline counted source_binaryfile_ingest, fixed in-window r12
-# before the ledger froze); round-13 full sweep: 276/288 OK with
-# exactly these 12 raising:
+# Sweep findings (tools/empty_sweep.py), by class; the round-13 full
+# sweep ran 276/288 OK with exactly these 12 raising:
 #   empty-dir round-trips — fixture staging writes ZERO files, the
 #     read side then fails on a missing/schema-less path (production
 #     ingest dirs always exist; the fix is pathGlobFilter/explicit
-#     schemas, applied to source_binaryfile_ingest in-window r12):
+#     schemas, as source_binaryfile_ingest already does):
 EXPECTED_RAISERS = frozenset(
     {
         "dpp_pruned_revenue",
@@ -54,10 +44,6 @@ EXPECTED_RAISERS = frozenset(
         "streaming_upsert_snapshot",
         #   designed loud guard (raises a clear ValueError by contract):
         "streaming_ivf_maintenance",
-        #   genuine empty-input bug class awaiting its vintage rotation
-        #   (SCALE.md queue): none — the round-12 findings are fixed.
-        #   The remaining streaming empty-dir entries rotate r14 with
-        #   the deferred r07 tail.
     }
 )
 
@@ -94,13 +80,13 @@ def test_ledger_is_exactly_the_frozen_set():
     )
 
 
-def sample_for_round(rnd: int) -> list[str]:
+def sample_for_key(key: int) -> list[str]:
     from cdc_extractor_spark.queries import QUERIES
 
     pool = sorted(set(QUERIES) - EXPECTED_RAISERS)
     keyed = sorted(
         pool,
-        key=lambda n: hashlib.md5(f"empty:{rnd}:{n}".encode()).hexdigest(),
+        key=lambda n: hashlib.md5(f"empty:{key}:{n}".encode()).hexdigest(),
     )
     return sorted(keyed[:SAMPLE_SIZE])
 
@@ -110,11 +96,6 @@ def test_ledger_names_are_registered():
 
     unknown = sorted(EXPECTED_RAISERS - set(QUERIES))
     assert not unknown, f"stale exclusion-ledger names: {unknown}"
-
-
-def test_rotation_actually_rotates():
-    rnd = current_round()
-    assert set(sample_for_round(rnd)) != set(sample_for_round(rnd - 1))
 
 
 @pytest.fixture(scope="module")
@@ -129,7 +110,7 @@ def empty_sf(spark, tmp_path_factory):
     return make_empty_fixture(spark, base)
 
 
-@pytest.mark.parametrize("name", sample_for_round(current_round()))
+@pytest.mark.parametrize("name", sample_for_key(SAMPLE_KEY))
 def test_sampled_query_survives_empty_input(spark, empty_sf, name):
     from cdc_extractor_spark.queries import QUERIES
 

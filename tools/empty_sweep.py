@@ -5,9 +5,7 @@ WorkerRunnable.java:145 NoSuchElementException); rounds 8-12 pinned
 per-round operators against that bug class in their test files.  This
 tool runs EVERY registered query over a zero-row clone of the fixture
 schema and reports which ones raise — the findings feed
-tests/test_empty_input_sample.py's exclusion ledger and the vintage
-queue (fixes ride the owning query's next window rotation, where the
-helper drift is free).
+tests/test_empty_input_sample.py's exclusion ledger (EXPECTED_RAISERS).
 
 Usage: python tools/empty_sweep.py [names...]   (default: all)
 """
