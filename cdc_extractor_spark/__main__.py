@@ -38,7 +38,6 @@ def _cmd_run(args: argparse.Namespace) -> int:
     from cdc_extractor_spark.session import get_session
     from cdc_extractor_spark.sources.changes import changes_df
     from cdc_extractor_spark.streaming.pipeline import (
-        read_epoch_metrics,
         run_cdc_pipeline,
         write_feed_batches,
     )
@@ -54,7 +53,7 @@ def _cmd_run(args: argparse.Namespace) -> int:
     tables = tuple(t for t in args.tables.split(",") if t) or None
     timeout = int(args.run_duration_min * 60)
     extracted: list[dict] = []
-    run_cdc_pipeline(
+    rows = run_cdc_pipeline(
         spark,
         feed,
         args.out,
@@ -62,7 +61,6 @@ def _cmd_run(args: argparse.Namespace) -> int:
         tables=tables,
         on_epoch=extracted.append,
     )
-    rows = read_epoch_metrics(os.path.join(args.out, "metrics"))
     for r in rows:
         print(
             f"epoch={r['epoch_id']} offsets=({r['min_event_id']},"

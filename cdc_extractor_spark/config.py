@@ -17,8 +17,6 @@ Two deliberate fixes over the reference (SURVEY.md §1.2, §2 bug list):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 # The reference monitors TPC-C/BenchmarkSQL tables.  Our fixtures use the
 # events.event_type domain as the stand-in filter domain (FIXTURES.md),
 # with the original bmsql names kept for documentation parity.
@@ -44,17 +42,3 @@ TABLE_GROUPS: dict[str, tuple[str, ...]] = {
     "third": ("error",),
 }
 
-
-@dataclass(frozen=True)
-class EngineConfig:
-    """Runtime knobs, mirroring the reference's system properties
-    (``Client.java:13-14``, ``CoordinatorRunnable.java:36,77``)."""
-
-    num_workers: int = 4  # -DnumberOfThread → shuffle/scan parallelism hint
-    poll_interval_ms: int = 1000  # -DsleepDuration → streaming trigger interval
-    table_group: str = "all"  # -Dtables
-    run_duration_min: float = 1.0  # -DrunDuration → awaitTermination timeout
-    max_events_per_trigger: int = 100_000  # backpressure (queue cap analog)
-
-    def tables(self) -> tuple[str, ...]:
-        return TABLE_GROUPS[self.table_group]

@@ -1835,13 +1835,17 @@ def _demo_stream_parallelism(spark: SparkSession, n: int = 4):
 
 def q_streaming_microbatch_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.2-3.3 end-to-end: file-source micro-batches over the customer
-    change stream (one file per epoch ≙ one coordinator Task), foreachBatch
-    epoch body (A10 sink + A6/A9 metrics), checkpointed.  Returns the
+    change stream (one file per epoch), foreachBatch epoch body (A10 sink
+    with the A6/A9 metrics observed on it), checkpointed.  Returns the
     per-epoch metrics frame."""
     import tempfile
 
     from .sources.changes import _stream
-    from .streaming.pipeline import run_cdc_pipeline, write_feed_batches
+    from .streaming.pipeline import (
+        EPOCH_METRICS_SCHEMA,
+        run_cdc_pipeline,
+        write_feed_batches,
+    )
 
     work = tempfile.mkdtemp(prefix="stream_demo_")
     feed = _cached_feed(
@@ -1855,7 +1859,8 @@ def q_streaming_microbatch_epochs(spark: SparkSession, sf_dir: str) -> DataFrame
         ),
     )
     with _demo_stream_parallelism(spark):
-        return run_cdc_pipeline(spark, feed, work + "/out")
+        rows = run_cdc_pipeline(spark, feed, work + "/out")
+    return spark.createDataFrame(rows, EPOCH_METRICS_SCHEMA)
 
 
 QUERIES["streaming_microbatch_epochs"] = q_streaming_microbatch_epochs

@@ -38,20 +38,19 @@ def stringify_all(df: DataFrame) -> DataFrame:
 
 
 def write_pipe_text(
-    df: DataFrame,
-    path: str,
-    partition_by: str | None = None,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, partition_by: str | None = None
 ) -> None:
-    """Write the pipe-delimited extract (``chunk*`` files).
+    """Write the pipe-delimited extract (``chunk*`` files), replacing
+    anything at ``path``.
 
-    ``mode='append'`` is what the streaming ``foreachBatch`` epoch body
-    uses — the analog of the reference's per-task appends, but with
-    task-level atomicity from the Hadoop commit protocol.
+    The streaming ``foreachBatch`` epoch body writes each epoch to its
+    own staging dir and publishes the files under an epoch-keyed name
+    (``streaming/pipeline.py``) — the analog of the reference's
+    per-task appends, but idempotent under replay.
     """
-    writer = stringify_all(df).write.mode(mode).option("sep", PIPE).option(
-        "header", "true"
-    )
+    writer = stringify_all(df).write.mode("overwrite").option(
+        "sep", PIPE
+    ).option("header", "true")
     if partition_by:
         writer = writer.partitionBy(partition_by)
     writer.csv(path)

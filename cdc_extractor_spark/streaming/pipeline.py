@@ -6,39 +6,58 @@ Mapping (SURVEY.md §3):
 - coordinator poll loop (``CoordinatorRunnable.java:67-110``: sleep →
   ``max(event_id)`` → emit ``(lo, hi]`` task)  ≙  the file source's
   ``latestOffset`` per trigger; ``sleepDuration`` is the caller's
-  cadence of ``availableNow`` passes; ``maxFilesPerTrigger=1`` makes
-  one arriving file one epoch, exactly one ``Task``;
+  cadence of ``availableNow`` passes.  The reference emits one ``Task``
+  per poll; here ``maxFilesPerTrigger=1`` makes each arrived file one
+  epoch, so a pass over a backlog of k files runs k epochs;
 - worker epoch body (``WorkerRunnable.java:85-200``: range scan →
   stringify → append chunk file → distinct xids → commit-ts lookup →
-  advance ``uptodate``)  ≙  ``foreachBatch`` below: the SAME pure
-  batch operators (operators/changelog.py) applied to the epoch's
-  DataFrame, then the A10 pipe sink append;
+  advance ``uptodate``)  ≙  ``foreachBatch`` below.  The reference
+  collects each row's xid in the same loop that appends the row; here
+  the epoch's metrics (offset range, rows, distinct txns, ``uptodate``)
+  are an ``Observation`` on the extract write itself, so a data epoch
+  is one Spark job, with no second scan of the batch;
 - staleness monitor (``QueryRequestRunnable.java:30-54``)  ≙  the
   extraction query's own per-epoch metrics rows: each epoch's
-  ``uptodate_ms`` is collected to the driver as the epoch commits, and
-  the caller reads ``now − uptodate`` off the rows of the epochs it just
-  extracted — one streaming pass, no shared mutable ``uptodate`` static,
-  no broken lock (§2 bug list).
+  ``uptodate_ms`` reaches the driver as the epoch commits, and the
+  caller reads ``now − uptodate`` off the rows of the epochs it just
+  extracted — one streaming pass, no shared mutable ``uptodate``
+  static, no broken lock (§2 bug list).
+
+Both epoch outputs are idempotent per epoch id, so the at-least-once
+``foreachBatch`` yields an exactly-once extract: the epoch's files are
+written to a staging dir and renamed into ``extract/`` under an
+``epoch_NNNNN-`` prefix, replacing any files of an earlier attempt, and
+its metrics row is one file named by the epoch.
 
 The bounded task queue / backpressure (``Client.java:17``,
 ``ArrayBlockingQueue(10000)``) has no code here at all:
 ``maxFilesPerTrigger`` makes each arrived file one epoch, and a pass
-drains the backlog epoch by epoch.
+drains the backlog epoch by epoch.  One epoch per poll is not attempted
+here: ``streaming_microbatch_epochs``'s oracle pins one epoch per file,
+the streaming modules ``partials``, ``stateful``, ``snapshot_state``
+and ``upsert`` share ``read_change_stream``, and a poller that keeps up
+(the live case) never has a backlog above one file.
 
 Scale: each epoch is a distributed job over the files' row groups; the
 per-epoch metrics are one driver-side row per epoch (O(epochs), not
 O(rows)), published as one small file per epoch on a driver-local
-path.  At 100 TB the identical pipeline runs with the feed dir on
-object storage, polled on the caller's cadence; nothing below assumes
-local mode.
+path.  The observed distinct-txn set holds one epoch's transaction
+ids, the set the reference's worker looks up.  At 100 TB the identical
+pipeline runs with the feed dir on object storage, polled on the
+caller's cadence.  Only ``out_dir`` must be a filesystem the driver
+mounts: the metrics files and the extract publish are driver-side
+renames (on object storage the publish becomes a Hadoop ``FileSystem``
+rename).
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -143,7 +162,8 @@ def write_feed_batches(changes: DataFrame, feed_dir: str, n_batches: int) -> lis
 
 def read_change_stream(spark: SparkSession, feed_dir: str) -> DataFrame:
     """The streaming scan of the change feed.  ``maxFilesPerTrigger=1``
-    ≙ one coordinator Task per epoch (CoordinatorRunnable.java:88)."""
+    makes each arrived file one epoch (the coordinator's one Task per
+    poll, CoordinatorRunnable.java:88, when the poller keeps up)."""
     return (
         spark.readStream.schema(CHANGES_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -182,6 +202,23 @@ def read_epoch_metrics(metrics_dir: str) -> list[dict]:
     return table.sort_by("epoch_id").to_pylist()
 
 
+def _publish_epoch_extract(staging: str, extract_dir: str, epoch_id: int) -> None:
+    """Move one epoch's staged extract files into ``extract_dir`` as
+    ``table_name=X/epoch_{id}-<part>.csv``, first removing any files an
+    earlier attempt of the same epoch published, so a replayed epoch
+    replaces its rows instead of appending them a second time."""
+    prefix = f"epoch_{epoch_id:05d}-"
+    for old in glob.glob(os.path.join(extract_dir, "table_name=*", prefix + "*")):
+        os.remove(old)
+    for part_dir in glob.glob(os.path.join(staging, "table_name=*")):
+        dest = os.path.join(extract_dir, os.path.basename(part_dir))
+        os.makedirs(dest, exist_ok=True)
+        for fn in os.listdir(part_dir):
+            if fn.startswith("part-") and fn.endswith(".csv"):
+                os.replace(os.path.join(part_dir, fn), os.path.join(dest, prefix + fn))
+    shutil.rmtree(staging)
+
+
 def run_cdc_pipeline(
     spark: SparkSession,
     feed_dir: str,
@@ -189,18 +226,22 @@ def run_cdc_pipeline(
     timeout_sec: int = 120,
     tables: tuple[str, ...] | None = None,
     on_epoch: Callable[[dict], None] | None = None,
-) -> DataFrame:
+) -> list[dict]:
     """Run the full §3.3 epoch body over every available batch and
-    return the per-epoch metrics DataFrame (every epoch so far, not
-    just this call's).
+    return the per-epoch metrics rows, read on the driver (every epoch
+    so far, not just this call's), in epoch order.
 
-    Per epoch (``foreachBatch``):
-    1. A10: append the stringified extract, demuxed by table (B1), to
+    Per epoch (``foreachBatch``), one Spark job:
+    1. A10: write the stringified extract, demuxed by table (B1), to
+       ``out_dir/staging/epoch_{id}``, then publish its files into
        ``out_dir/extract`` — the ``chunk*`` files;
-    2. A6/A9: distinct txns + max commit ts, one aggregate collected to
-       the driver and published as the epoch's own file under
-       ``out_dir/metrics`` — the watermark advance.  A replayed epoch
-       (at-least-once ``foreachBatch``) overwrites its row.
+    2. A6/A9: the offset range, row count, distinct txns and max commit
+       ts are observed on that same write, collected to the driver and
+       published as the epoch's own file under ``out_dir/metrics`` —
+       the watermark advance.
+
+    A replayed epoch (at-least-once ``foreachBatch``) replaces its
+    extract files and its metrics row, so both stay exactly-once.
 
     ``on_epoch``, if given, receives each metrics row this call
     extracted, as a dict, in epoch order — the freshness of exactly
@@ -211,22 +252,27 @@ def run_cdc_pipeline(
     pushed to the scan, never interpolated into SQL text.
     """
     extract_dir = os.path.join(out_dir, "extract")
+    staging_dir = os.path.join(out_dir, "staging")
     metrics_dir = os.path.join(out_dir, "metrics")
     checkpoint_dir = os.path.join(out_dir, "checkpoint")
     os.makedirs(metrics_dir, exist_ok=True)
 
     def epoch_body(batch_df: DataFrame, epoch_id: int) -> None:
-        write_pipe_text(
-            batch_df, extract_dir, partition_by="table_name", mode="append"
-        )
-        agg = batch_df.agg(
+        # one Observation per epoch: an Observation reports only its
+        # first action.  observe() rejects DISTINCT, hence the set size.
+        obs = Observation()
+        observed = batch_df.observe(
+            obs,
             F.min("event_id").alias("min_event_id"),
             F.max("event_id").alias("max_event_id"),
             F.count(F.lit(1)).alias("n_rows"),
-            F.countDistinct("transaction_id").alias("n_txns"),
+            F.size(F.collect_set("transaction_id")).cast("long").alias("n_txns"),
             F.max("commit_ts_ms").alias("uptodate_ms"),
-        ).first()
-        row = {"epoch_id": epoch_id, **agg.asDict()}
+        )
+        staging = os.path.join(staging_dir, f"epoch_{epoch_id:05d}")
+        write_pipe_text(observed, staging, partition_by="table_name")
+        _publish_epoch_extract(staging, extract_dir, epoch_id)
+        row = {"epoch_id": epoch_id, **obs.get}
         _publish_epoch_metrics(metrics_dir, row)
         if on_epoch is not None:
             on_epoch(row)
@@ -241,7 +287,7 @@ def run_cdc_pipeline(
         .start()
     )
     q.awaitTermination(timeout_sec)
-    return spark.read.schema(EPOCH_METRICS_SCHEMA).parquet(metrics_dir)
+    return read_epoch_metrics(metrics_dir)
 
 
 def run_observed_staleness(

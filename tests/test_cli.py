@@ -3,6 +3,7 @@ process launch (`Client.java:11-49`) re-expressed; see __main__.py."""
 
 from __future__ import annotations
 
+import glob
 import os
 import re
 import shutil
@@ -85,7 +86,8 @@ def test_cli_run_is_one_pass_with_driver_side_history(
     spark, staged, tmp_path, capsys, monkeypatch
 ):
     """Each `run` is one streaming query; it prints the full epoch
-    history, staleness for only the epochs it extracted, and an idle
+    history, staleness for only the epochs it extracted, a data epoch
+    is one Spark job (the metrics ride the extract write), and an idle
     poll schedules no Spark job."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
@@ -111,6 +113,8 @@ def test_cli_run_is_one_pass_with_driver_side_history(
     assert main(argv) == 0
     out2 = capsys.readouterr().out
     assert len(started) == 1
+    tracker = spark.sparkContext.statusTracker()
+    assert len(tracker.getJobIdsForGroup(str(started[0].runId))) == 1
     epochs = {int(e): v for e, v in _EPOCH.findall(out2)}
     assert sorted(epochs) == [0, 1, 2]
     now_ms = max(int(v) for v in epochs.values() if v != "None")
@@ -119,7 +123,6 @@ def test_cli_run_is_one_pass_with_driver_side_history(
     for b, _, lag in stale:
         assert int(lag) == now_ms - int(epochs[int(b)])
 
-    tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
     started.clear()
     assert main(argv) == 0
@@ -131,24 +134,50 @@ def test_cli_run_is_one_pass_with_driver_side_history(
     assert not _STALE.findall(out3)
 
 
+def _extract_rows(out: str) -> dict[str, int]:
+    """Data rows per table in ``out``'s extract (each file has a header)."""
+    counts: dict[str, int] = {}
+    for path in glob.glob(os.path.join(out, "extract", "table_name=*", "*.csv")):
+        table = os.path.basename(os.path.dirname(path))
+        with open(path) as f:
+            counts[table] = counts.get(table, 0) + sum(1 for _ in f) - 1
+    return counts
+
+
 def test_replayed_epoch_keeps_one_metrics_row(spark, staged, tmp_path):
     """foreachBatch is at-least-once: an epoch whose commit was lost is
-    replayed on restart, and its metrics row must be replaced, not
-    appended a second time."""
+    replayed on restart, and its metrics row and its extract files must
+    be replaced, not appended a second time."""
     from cdc_extractor_spark.streaming.pipeline import run_cdc_pipeline
 
     feed, out = str(tmp_path / "feed"), str(tmp_path / "out")
     for i in range(2):
         _publish(staged, feed, i)
-    first = {r["epoch_id"]: r for r in run_cdc_pipeline(spark, feed, out).collect()}
+    first = {r["epoch_id"]: r for r in run_cdc_pipeline(spark, feed, out)}
     assert sorted(first) == [0, 1]
+    extracted = _extract_rows(out)
+    assert sum(extracted.values()) == sum(r["n_rows"] for r in first.values())
     commits = os.path.join(out, "checkpoint", "commits")
     # drop the commit and its local-FS checksum together: an orphan
     # .crc makes Spark's rewrite of the commit file fail
     for name in ("1", ".1.crc"):
         os.remove(os.path.join(commits, name))
     replayed: list[dict] = []
-    again = run_cdc_pipeline(spark, feed, out, on_epoch=replayed.append).collect()
+    again = run_cdc_pipeline(spark, feed, out, on_epoch=replayed.append)
     assert [r["epoch_id"] for r in replayed] == [1]
     assert sorted(r["epoch_id"] for r in again) == [0, 1]
     assert {r["epoch_id"]: r for r in again} == first
+    assert _extract_rows(out) == extracted
+
+
+def test_filtered_out_epochs_report_empty_rows(spark, staged, tmp_path):
+    """An epoch whose batch the table filter empties still commits a
+    metrics row: zero rows and txns, and no offsets or uptodate."""
+    from cdc_extractor_spark.streaming.pipeline import run_cdc_pipeline
+
+    rows = run_cdc_pipeline(spark, staged, str(tmp_path / "out"), tables=("nope",))
+    assert rows == [
+        {"epoch_id": e, "min_event_id": None, "max_event_id": None,
+         "n_rows": 0, "n_txns": 0, "uptodate_ms": None}
+        for e in range(3)
+    ]
