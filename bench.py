@@ -56,10 +56,11 @@ def _canary(spark) -> list[float]:
 
 
 def _stream_canary(spark) -> list[float]:
-    """Fixed-cost STREAMING-lifecycle probe: one empty-feed
-    availableNow StreamingQuery through start → awaitTermination →
-    stop, two reps, both reported.  It reads zero rows, so its wall
-    time is pure StreamingQuery lifecycle overhead — checkpoint/
+    """Fixed-cost STREAMING-lifecycle probe: one empty-feed pass
+    through the package's own runner
+    (``streaming.pipeline.run_available_now``: start → wait → stop if
+    still running), two reps, both reported.  It reads zero rows, so
+    its wall time is pure StreamingQuery lifecycle overhead — checkpoint/
     offset-log setup, trigger scheduling, termination.  Swings of 2x
     in streaming_interval_join and streaming_left_outer_join have been
     dominated by exactly this fixed cost, not plan cost; comparing
@@ -68,20 +69,19 @@ def _stream_canary(spark) -> list[float]:
     import shutil
     import tempfile
 
+    from cdc_extractor_spark.streaming.pipeline import run_available_now
+
     reps: list[float] = []
     for _ in range(2):
         base = tempfile.mkdtemp(prefix="cdcx_stream_canary_")
         feed = os.path.join(base, "feed")
         os.makedirs(feed)
         t0 = time.perf_counter()
-        q = (
+        run_available_now(
             spark.readStream.schema("v long").format("json").load(feed)
-            .writeStream.format("noop")
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            .writeStream.format("noop"),
+            os.path.join(base, "ckpt"),
         )
-        q.awaitTermination()
         reps.append(round(time.perf_counter() - t0, 4))
         shutil.rmtree(base, ignore_errors=True)
     return reps

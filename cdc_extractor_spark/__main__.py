@@ -8,10 +8,13 @@ Streaming pass over the change feed: parallelism sizes the shuffle
 partitions (scan fan-out is engine-scheduled, A15), the table
 restriction is a pushed ``In`` filter (never SQL-interpolated —
 Config.java's injection-by-construction and missing-comma bugs are
-structurally impossible), and the run duration bounds
-``awaitTermination``; shutdown is a drained stop, not a hard exit.
+structurally impossible), and the run duration bounds the pass.  A
+pass that outlives it is stopped, not killed by a hard exit: no
+streaming query is left running, and the next ``run`` on the same
+``--out`` resumes from the checkpoint, replaying the interrupted epoch
+exactly-once.
 
-``run`` is one ``availableNow`` pass: it extracts every batch that
+``run`` is one bounded pass: it extracts every batch that
 arrived since the last pass on the same ``--out`` (the checkpoint holds
 the high-water mark) and returns.  The caller owns the poll cadence —
 call ``run`` again to poll again; ``--poll-interval-ms`` is parsed for
@@ -139,7 +142,12 @@ def main(argv: list[str] | None = None) -> int:
         "--tables", default="customer,orders", help="-Dtables (comma list)"
     )
     r.add_argument(
-        "--run-duration-min", type=float, default=2.0, help="-DrunDuration"
+        "--run-duration-min",
+        type=float,
+        default=2.0,
+        help="-DrunDuration: bound on the pass; a timed-out pass is "
+        "stopped, and the next run on the same --out resumes from the "
+        "checkpoint, exactly-once",
     )
     r.add_argument("--batches", type=int, default=4, help="feed micro-batches")
     r.set_defaults(fn=_cmd_run)

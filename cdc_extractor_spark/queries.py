@@ -4019,6 +4019,7 @@ def q_streaming_python_sink_chunks(spark: SparkSession, sf_dir: str) -> DataFram
     import tempfile
 
     from .sources import pyds
+    from .streaming.pipeline import run_available_now
 
     work = tempfile.mkdtemp(prefix="pyds_sink_")
     out = work + "/chunks"
@@ -4032,15 +4033,12 @@ def q_streaming_python_sink_chunks(spark: SparkSession, sf_dir: str) -> DataFram
     ) + "/data"
     pyds.register(spark)
     pyds.register_sink(spark)
-    q = (
+    run_available_now(
         spark.readStream.format("changelog_poll").option("path", feed)
         .option("numPartitions", "2").load()
-        .writeStream.format("pipe_chunks").option("path", out)
-        .option("checkpointLocation", work + "/ckpt")
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.format("pipe_chunks").option("path", out),
+        work + "/ckpt",
     )
-    q.awaitTermination(120)
     rows = []
     for m in sorted(f for f in os.listdir(out) if f.startswith("_epoch_")):
         man = json.load(open(os.path.join(out, m)))
@@ -4050,7 +4048,7 @@ def q_streaming_python_sink_chunks(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 QUERIES["streaming_python_sink_chunks"] = q_streaming_python_sink_chunks
-# Exactly-once accounting, value-hash-checked: one availableNow epoch
+# Exactly-once accounting, value-hash-checked: one pass, one epoch
 # over the whole feed (the polling source exposes no read limit), one
 # published chunk per scan partition (numPartitions=2), and the
 # manifest row total must conserve every change row — a duplicated or

@@ -470,40 +470,3 @@ class PipeChunkDataSource(DataSource):
 def register_sink(spark) -> None:
     spark.dataSource.register(PipeChunkDataSource)
 
-
-def expire_epochs(path: str, keep_last: int) -> list[int]:
-    """Retention for the chunk sink: drop all but the newest
-    ``keep_last`` published epochs.  The reference retains every chunk
-    file forever (WorkerRunnable.java appends for the whole run — the
-    unbounded-growth item on SURVEY.md §2's bug list); this is the
-    maintenance half a production sink needs.
-
-    Deletion order is reader-safe: each epoch's MANIFEST goes first
-    (the epoch atomically disappears from any reader that lists
-    manifests, the commit-point convention the sink documents), then
-    its chunk files — a reader that already loaded the manifest may
-    race a chunk delete, which is the same contract as any
-    retention-compacted table (readers pin a snapshot or retry).
-
-    Returns the expired epoch ids.  O(#epochs) driver-side metadata;
-    never touches row data.
-    """
-    import json
-    import os
-
-    manifests = sorted(
-        (f for f in os.listdir(path) if f.startswith("_epoch_")),
-        key=lambda f: int(f[len("_epoch_"):-len(".json")]),
-    )
-    expire = manifests[:-keep_last] if keep_last > 0 else manifests
-    gone = []
-    for m in expire:
-        full = os.path.join(path, m)
-        with open(full) as fh:
-            man = json.load(fh)
-        os.remove(full)  # manifest first: epoch vanishes atomically
-        for c in man["chunks"]:
-            if os.path.exists(c["file"]):
-                os.remove(c["file"])
-        gone.append(int(man["epoch"]))
-    return gone

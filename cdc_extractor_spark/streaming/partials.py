@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
-from .pipeline import read_change_stream
+from .pipeline import read_change_stream, run_available_now
 
 PARTIAL_COLS = ("action", "bucket", "bm")
 
@@ -55,7 +55,6 @@ def run_incremental_bitmap_distinct(
     spark: SparkSession,
     feed_dir: str,
     out_dir: str,
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """Maintain the bitmap-partial table across every available epoch;
     returns the final per-action exact distinct-key counts."""
@@ -78,14 +77,10 @@ def run_incremental_bitmap_distinct(
         # from one epoch.
         cache.publish_snapshot(version, part_dir)
 
-    q = (
-        read_change_stream(spark, feed_dir)
-        .writeStream.foreachBatch(epoch_body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        read_change_stream(spark, feed_dir).writeStream.foreachBatch(epoch_body),
+        checkpoint_dir,
     )
-    q.awaitTermination(timeout_sec)
     return (
         spark.read.parquet(part_dir)
         .groupBy("action")

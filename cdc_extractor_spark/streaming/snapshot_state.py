@@ -12,13 +12,7 @@ which maintains the same snapshot with ``foreachBatch`` MERGE semantics
 crash-safe, per-key partitioned, no read-modify-write of an external
 table per epoch.
 
-Primary implementation: ``applyInPandasWithState`` (GroupState).  The
-Spark 4.x successor API ``transformWithStateInPandas`` (StatefulProcessor
-+ ValueState + RocksDB provider) is provided as
-``snapshot_processor_class()`` behind an import guard: its Python
-worker requires the ``protobuf`` package, which this container lacks;
-on a cluster with protobuf installed, ``run_stateful_snapshot(...,
-use_tws=True)`` switches over with identical semantics.
+Implementation: ``applyInPandasWithState`` (GroupState).
 
 Scale: state is one fixed-width row per live key, hash-partitioned by
 (table_name, key) across executors — the 100 TB sizing question is
@@ -40,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .pipeline import read_change_stream
+from .pipeline import read_change_stream, run_available_now
 
 STATE_SCHEMA = T.StructType(
     [
@@ -110,99 +104,41 @@ def _advance_snapshot(
     )
 
 
-def snapshot_processor_class():
-    """The transformWithStateInPandas form (Spark 4.x arbitrary-state
-    API).  Import-guarded: raises ImportError where the required
-    ``protobuf`` package is unavailable (as in this container)."""
-    import google.protobuf  # noqa: F401 — the TWS worker hard-requires it
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SnapshotProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._snap = handle.getValueState(
-                "snap",
-                "last_event_id LONG, last_action STRING, "
-                "last_val_cents LONG, last_commit_ts_ms LONG, "
-                "n_changes LONG",
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = (
-                self._snap.get() if self._snap.exists()
-                else (-1, "", 0, -1, 0)
-            )
-            ev, action, val, ts, n = _merge_batch(tuple(prev), rows)
-            self._snap.update((ev, action, val, ts, n))
-            yield pd.DataFrame(
-                {
-                    "table_name": [key[0]],
-                    "key": [int(key[1])],
-                    "last_event_id": [ev],
-                    "last_action": [action],
-                    "last_val_cents": [val],
-                    "last_commit_ts_ms": [ts],
-                    "n_changes": [n],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return SnapshotProcessor
-
-
 def run_stateful_snapshot(
     spark: SparkSession,
     feed_dir: str,
     out_dir: str,
-    timeout_sec: int = 180,
-    use_tws: bool = False,
 ) -> DataFrame:
     """Consume every available feed batch through the stateful snapshot
     operator and return the final state: exactly one row per (table,
     key) — the last update emitted for that key across all epochs.
 
-    ``availableNow`` drains the backlog in offset-bounded micro-batches
+    One bounded pass drains the backlog in offset-bounded micro-batches
     (the coordinator's Task semantics) and stops; a restart on the same
     checkpoint resumes the state store where it left off.
     """
     result_dir = os.path.join(out_dir, "snap_out")
     checkpoint_dir = os.path.join(out_dir, "snap_checkpoint")
 
-    grouped = read_change_stream(spark, feed_dir).groupBy(
-        "table_name", "key")
-    if use_tws:
-        updates = grouped.transformWithStateInPandas(
-            statefulProcessor=snapshot_processor_class()(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    else:
-        updates = grouped.applyInPandasWithState(
-            _advance_snapshot,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    updates = read_change_stream(spark, feed_dir).groupBy(
+        "table_name", "key"
+    ).applyInPandasWithState(
+        _advance_snapshot,
+        outputStructType=OUTPUT_SCHEMA,
+        stateStructType=STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
     def epoch_body(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.withColumn(
             "epoch_id", F.lit(epoch_id).cast("long")
         ).write.mode("append").parquet(result_dir)
 
-    q = (
-        updates.writeStream.foreachBatch(epoch_body)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        updates.writeStream.foreachBatch(epoch_body).outputMode("update"),
+        checkpoint_dir,
     )
-    q.awaitTermination(timeout_sec)
 
     all_updates = spark.read.parquet(result_dir)
     latest = F.max_by(

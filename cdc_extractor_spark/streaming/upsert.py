@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from .. import cache
 from ..operators.cdc import latest_per_key
-from .pipeline import read_change_stream
+from .pipeline import read_change_stream, run_available_now
 
 SNAPSHOT_COLS = (
     "table_name", "key", "last_event_id", "last_action",
@@ -95,7 +95,6 @@ def run_incremental_snapshot(
     spark: SparkSession,
     feed_dir: str,
     out_dir: str,
-    timeout_sec: int = 180,
 ) -> DataFrame:
     """Maintain the snapshot across every available epoch; returns the
     final snapshot DataFrame."""
@@ -117,12 +116,8 @@ def run_incremental_snapshot(
         # this pointer with a MERGE metadata commit.)
         cache.publish_snapshot(version, snap_dir)
 
-    q = (
-        read_change_stream(spark, feed_dir)
-        .writeStream.foreachBatch(epoch_body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        read_change_stream(spark, feed_dir).writeStream.foreachBatch(epoch_body),
+        checkpoint_dir,
     )
-    q.awaitTermination(timeout_sec)
     return spark.read.parquet(snap_dir)

@@ -3,10 +3,14 @@ process launch (`Client.java:11-49`) re-expressed; see __main__.py."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
 import re
 import shutil
+import time
+from collections import Counter
+from pathlib import Path
 
 import pytest
 
@@ -181,3 +185,65 @@ def test_filtered_out_epochs_report_empty_rows(spark, staged, tmp_path):
          "n_rows": 0, "n_txns": 0, "uptodate_ms": None}
         for e in range(3)
     ]
+
+
+def _extract_lines(out: str) -> dict[tuple[str, str], Counter]:
+    """The lines of ``out``'s extract files, per (table, epoch)."""
+    lines: dict[tuple[str, str], Counter] = {}
+    for path in glob.glob(os.path.join(out, "extract", "table_name=*", "*.csv")):
+        key = (
+            os.path.basename(os.path.dirname(path)),
+            os.path.basename(path).split("-", 1)[0],
+        )
+        with open(path) as f:
+            lines.setdefault(key, Counter()).update(f)
+    return lines
+
+
+def test_timed_out_pass_is_stopped_and_resumes_exactly_once(
+    spark, staged, tmp_path
+):
+    """A pass that outlives its timeout is stopped, not left running,
+    and the next call on the same out dir resumes from the checkpoint:
+    its epochs and per-epoch extract files equal a fresh run's."""
+    from cdc_extractor_spark.streaming.pipeline import run_cdc_pipeline
+
+    feed, out, fresh_out = (str(tmp_path / d) for d in ("feed", "out", "fresh"))
+    for i in range(3):
+        _publish(staged, feed, i)
+    cut = run_cdc_pipeline(
+        spark, feed, out, timeout_sec=1, on_epoch=lambda _: time.sleep(2)
+    )
+    assert len(cut) < 3
+    assert spark.streams.active == []
+
+    resumed = run_cdc_pipeline(spark, feed, out)
+    fresh = run_cdc_pipeline(spark, feed, fresh_out)
+    assert len(fresh) == 3
+    assert [(r["epoch_id"], r["n_rows"]) for r in resumed] == [
+        (r["epoch_id"], r["n_rows"]) for r in fresh
+    ]
+    assert _extract_lines(out) == _extract_lines(fresh_out)
+
+
+def test_every_streaming_pass_goes_through_the_runner():
+    """``run_available_now`` is the only place in the package that
+    starts a pass and waits on it, so no caller can leave a query
+    running past its timeout."""
+    pkg = Path(__file__).resolve().parent.parent / "cdc_extractor_spark"
+    runner = pkg / "streaming" / "pipeline.py"
+    fn = next(
+        n
+        for n in ast.walk(ast.parse(runner.read_text()))
+        if isinstance(n, ast.FunctionDef) and n.name == "run_available_now"
+    )
+    inside, outside = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            if "awaitTermination(" in line or "availableNow" in line:
+                in_runner = path == runner and fn.lineno <= no <= fn.end_lineno
+                (inside if in_runner else outside).append(
+                    f"{path.relative_to(pkg)}:{no}"
+                )
+    assert inside
+    assert outside == []

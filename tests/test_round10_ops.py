@@ -197,9 +197,7 @@ class TestIvfMaintenanceRetryIdempotent:
 
         feed = str(tmp_path / "feed")
         os.makedirs(feed)  # exists but has no batches
-        out = run_ivf_maintenance(
-            spark, feed, str(tmp_path / "out"), timeout_sec=30
-        )
+        out = run_ivf_maintenance(spark, feed, str(tmp_path / "out"))
         assert out.schema == IVF_EPOCH_SCHEMA
         assert out.count() == 0
 

@@ -205,9 +205,7 @@ class TestIvfLegacyLayoutGuard:
         with open(os.path.join(snap, "part-00000.parquet"), "wb") as f:
             f.write(b"PAR1legacy")
         with pytest.raises(ValueError, match="non-versioned"):
-            run_ivf_maintenance(
-                spark, str(tmp_path / "feed"), out_dir, timeout_sec=5
-            )
+            run_ivf_maintenance(spark, str(tmp_path / "feed"), out_dir)
 
     def test_foreign_subdir_rejected(self, spark, tmp_path):
         """A non-epoch_* SUBDIRECTORY under snapshots/ (another tool's
@@ -223,9 +221,7 @@ class TestIvfLegacyLayoutGuard:
         snap = os.path.join(out_dir, "snapshots")
         os.makedirs(os.path.join(snap, "batch_0"))
         with pytest.raises(ValueError, match="non-versioned"):
-            run_ivf_maintenance(
-                spark, str(tmp_path / "feed"), out_dir, timeout_sec=5
-            )
+            run_ivf_maintenance(spark, str(tmp_path / "feed"), out_dir)
 
     def test_versioned_layout_accepted(self, spark, tmp_path):
         """epoch_* subdirs (and dot/underscore markers) are the
@@ -243,7 +239,7 @@ class TestIvfLegacyLayoutGuard:
         open(os.path.join(snap, "_SUCCESS"), "w").close()
         feed = str(tmp_path / "feed")
         os.makedirs(feed)
-        out = run_ivf_maintenance(spark, feed, out_dir, timeout_sec=30)
+        out = run_ivf_maintenance(spark, feed, out_dir)
         assert out.schema == IVF_EPOCH_SCHEMA
 
 

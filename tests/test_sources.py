@@ -438,40 +438,3 @@ def test_pyds_batch_writer_abort_leaves_nothing_visible(spark, sf_dir, tmp_path)
     )
     assert n == good.count()
 
-
-def test_expire_epochs_drops_oldest_and_keeps_accounting(spark, sf_dir, tmp_path):
-    """Retention: oldest epochs vanish manifest-first; surviving
-    manifests still account for every surviving chunk byte-exactly."""
-    import json
-    import os
-
-    from cdc_extractor_spark.sources import pyds
-
-    feed, ch = _feed(spark, sf_dir, tmp_path)
-    out = str(tmp_path / "ret_chunks")
-    os.makedirs(out, exist_ok=True)
-    pyds.register(spark)
-    pyds.register_sink(spark)
-    # several small epochs via maxRowsPerBatch-less source: re-run the
-    # stream twice over a growing checkpoint is complex — instead write
-    # three batch "epochs" through the stream writer API directly
-    # (the writer is Arrow-based: it consumes RecordBatches, so build
-    # one per epoch exactly as the engine would hand them over)
-    import pyarrow as pa
-
-    w = pyds.PipeChunkStreamWriter({"path": out})
-    tbl = pa.Table.from_pandas(ch.limit(30).toPandas())
-    for epoch in range(3):
-        batch = tbl.slice(epoch * 10, 10).combine_chunks().to_batches()[0]
-        msgs = [w.write(iter([batch]))]
-        w.commit(msgs, epoch)
-    assert len([f for f in os.listdir(out) if f.startswith("_epoch_")]) == 3
-    gone = pyds.expire_epochs(out, keep_last=1)
-    assert gone == [0, 1]
-    manifests = [f for f in os.listdir(out) if f.startswith("_epoch_")]
-    assert manifests == ["_epoch_2.json"]
-    man = json.load(open(os.path.join(out, manifests[0])))
-    chunks = [f for f in os.listdir(out) if f.startswith("chunk_")]
-    assert {os.path.basename(c["file"]) for c in man["chunks"]} == set(chunks)
-    n = sum(1 for f in chunks for _ in open(os.path.join(out, f)))
-    assert n == sum(c["n_rows"] for c in man["chunks"]) == 10
