@@ -3,24 +3,25 @@
 ``Client.java:11-49`` reads ``-DnumberOfThread`` / ``-DrunDuration`` /
 ``-DsleepDuration`` / ``-Dtables`` from JVM system properties, spawns
 one coordinator, N workers and a staleness monitor, sleeps, then
-``System.exit(0)``.  Here the same knobs configure one Structured
-Streaming pass over the change feed: parallelism sizes the shuffle
-partitions (scan fan-out is engine-scheduled, A15), the table
-restriction is a pushed ``In`` filter (never SQL-interpolated —
-Config.java's injection-by-construction and missing-comma bugs are
-structurally impossible), and the run duration bounds the pass.  A
-pass that outlives it is stopped, not killed by a hard exit: no
-streaming query is left running, and the next ``run`` on the same
-``--out`` resumes from the checkpoint, replaying the interrupted epoch
-exactly-once.
+``System.exit(0)``.  Here the same knobs configure one extraction
+call over the change feed: parallelism sizes the shuffle partitions
+(scan fan-out is engine-scheduled, A15), the table restriction is a
+pushed ``In`` filter (never SQL-interpolated — Config.java's
+injection-by-construction and missing-comma bugs are structurally
+impossible), and the run duration bounds the call.  No epoch starts
+after the bound, and an epoch that has started runs to completion
+instead of being killed by a hard exit; the next ``run`` on the same
+``--out`` picks up the files left over, exactly-once.
 
-``run`` is one bounded pass: it extracts every batch that
-arrived since the last pass on the same ``--out`` (the checkpoint holds
-the high-water mark) and returns.  The caller owns the poll cadence —
-call ``run`` again to poll again; ``--poll-interval-ms`` is parsed for
-``-DsleepDuration`` parity and not read.  The staleness monitor is the
-same pass: stdout carries one ``epoch=…`` line per epoch so far, then
-one ``staleness batch=…`` line per epoch this pass extracted with rows.
+``run`` is one bounded pass: it extracts every feed file that arrived
+since the last pass on the same ``--out`` (``O/epochs/`` records which
+files each epoch covers) and returns.  A pass that finds no new file
+lists the feed and starts no Spark job.  The caller owns the poll
+cadence — call ``run`` again to poll again; ``--poll-interval-ms`` is
+parsed for ``-DsleepDuration`` parity and not read.  The staleness
+monitor is the same pass: stdout carries one ``epoch=…`` line per epoch
+so far, then one ``staleness batch=…`` line per epoch this pass
+extracted with rows.
 
 Usage:
   python -m cdc_extractor_spark run --sf-dir /root/testdata/sf0.001 \\
@@ -54,13 +55,12 @@ def _cmd_run(args: argparse.Namespace) -> int:
             changes_df(spark, args.sf_dir), feed, args.batches
         )
     tables = tuple(t for t in args.tables.split(",") if t) or None
-    timeout = int(args.run_duration_min * 60)
     extracted: list[dict] = []
     rows = run_cdc_pipeline(
         spark,
         feed,
         args.out,
-        timeout_sec=timeout,
+        timeout_sec=args.run_duration_min * 60,
         tables=tables,
         on_epoch=extracted.append,
     )
@@ -145,9 +145,9 @@ def main(argv: list[str] | None = None) -> int:
         "--run-duration-min",
         type=float,
         default=2.0,
-        help="-DrunDuration: bound on the pass; a timed-out pass is "
-        "stopped, and the next run on the same --out resumes from the "
-        "checkpoint, exactly-once",
+        help="-DrunDuration: bound on the pass; no epoch starts after "
+        "it, and the next run on the same --out extracts the files left "
+        "over, exactly-once",
     )
     r.add_argument("--batches", type=int, default=4, help="feed micro-batches")
     r.set_defaults(fn=_cmd_run)

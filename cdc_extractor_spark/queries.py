@@ -1834,10 +1834,10 @@ def _demo_stream_parallelism(spark: SparkSession, n: int = 4):
 
 
 def q_streaming_microbatch_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§3.2-3.3 end-to-end: file-source micro-batches over the customer
-    change stream (one file per epoch), foreachBatch epoch body (A10 sink
-    with the A6/A9 metrics observed on it), checkpointed.  Returns the
-    per-epoch metrics frame."""
+    """§3.2-3.3 end-to-end: driver-planned epochs over the customer
+    change stream (one feed file per epoch, each epoch's files recorded
+    before it runs), the epoch body (A10 sink with the A6/A9 metrics
+    observed on it).  Returns the per-epoch metrics frame."""
     import tempfile
 
     from .sources.changes import _stream
@@ -1858,19 +1858,18 @@ def q_streaming_microbatch_epochs(spark: SparkSession, sf_dir: str) -> DataFrame
             d, 3,
         ),
     )
-    with _demo_stream_parallelism(spark):
-        rows = run_cdc_pipeline(spark, feed, work + "/out")
+    rows = run_cdc_pipeline(spark, feed, work + "/out")
     return spark.createDataFrame(rows, EPOCH_METRICS_SCHEMA)
 
 
 QUERIES["streaming_microbatch_epochs"] = q_streaming_microbatch_epochs
-# The per-epoch metrics of a REAL StreamingQuery are deterministic end
-# to end: the feed split is ntile(3) over event_id, write_feed_batches
-# stamps strictly increasing mtimes (file→epoch order pinned), and
-# maxFilesPerTrigger=1 makes epoch i scan exactly batch i — so the
-# DuckDB oracle recomputes each epoch's (offset range, row count,
+# The per-epoch metrics of the run path are deterministic end to end:
+# the feed split is ntile(3) over event_id, write_feed_batches stamps
+# strictly increasing mtimes, and run_cdc_pipeline plans one epoch per
+# feed file in (mtime, path) order, so epoch i scans exactly batch i —
+# the DuckDB oracle recomputes each epoch's (offset range, row count,
 # distinct txns, watermark) from the same arithmetic the feed was built
-# from.  A streaming lifecycle verified by value-hash, not rows-only.
+# from.  An incremental lifecycle verified by value-hash, not rows-only.
 ORACLES["streaming_microbatch_epochs"] = (
     "WITH c AS ("
     "  SELECT c_custkey * 8 + u.seq AS event_id, "

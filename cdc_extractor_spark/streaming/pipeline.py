@@ -1,68 +1,72 @@
-"""Structured Streaming CDC ingestion — the reference's coordinator /
-worker / staleness-monitor topology re-expressed as one micro-batch
-streaming query (SURVEY.md §3.2-3.4).
+"""CDC ingestion — the reference's coordinator / worker /
+staleness-monitor topology re-expressed as driver-planned epochs
+(``run_cdc_pipeline``) plus the Structured Streaming passes that need a
+state store (SURVEY.md §3.2-3.4).
 
 Mapping (SURVEY.md §3):
 - coordinator poll loop (``CoordinatorRunnable.java:67-110``: sleep →
-  ``max(event_id)`` → emit ``(lo, hi]`` task)  ≙  the file source's
-  ``latestOffset`` per trigger; ``sleepDuration`` is the caller's
-  cadence of bounded passes (``run_available_now``).  The reference
-  emits one ``Task`` per poll; here ``maxFilesPerTrigger=1`` makes each
-  arrived file one epoch, so a pass over a backlog of k files runs k
-  epochs;
+  ``max(event_id)`` → emit ``(lo, hi]`` task)  ≙  a driver listing of
+  the feed files no epoch has planned yet; ``sleepDuration`` is the
+  caller's cadence of ``run`` calls.  The reference emits one ``Task``
+  per poll; here each arrived file is one epoch, so a call over a
+  backlog of k files runs k epochs;
 - worker epoch body (``WorkerRunnable.java:85-200``: range scan →
   stringify → append chunk file → distinct xids → commit-ts lookup →
-  advance ``uptodate``)  ≙  ``foreachBatch`` below.  The reference
-  collects each row's xid in the same loop that appends the row; here
-  the epoch's metrics (offset range, rows, distinct txns, ``uptodate``)
-  are an ``Observation`` on the extract write itself, so a data epoch
-  is one Spark job, with no second scan of the batch;
+  advance ``uptodate``)  ≙  ``run_cdc_pipeline``'s epoch body, a batch
+  read of the epoch's planned files.  The reference collects each
+  row's xid in the same loop that appends the row; here the epoch's
+  metrics (offset range, rows, distinct txns, ``uptodate``) are an
+  ``Observation`` on the extract write itself, so a data epoch is one
+  Spark job, with no second scan of the batch;
 - staleness monitor (``QueryRequestRunnable.java:30-54``)  ≙  the
-  extraction query's own per-epoch metrics rows: each epoch's
+  extraction's own per-epoch metrics rows: each epoch's
   ``uptodate_ms`` reaches the driver as the epoch commits, and the
   caller reads ``now − uptodate`` off the rows of the epochs it just
-  extracted — one streaming pass, no shared mutable ``uptodate``
-  static, no broken lock (§2 bug list).
+  extracted — no shared mutable ``uptodate`` static, no broken lock
+  (§2 bug list).
 
-Both epoch outputs are idempotent per epoch id, so the at-least-once
-``foreachBatch`` yields an exactly-once extract: the epoch's files are
-written to a staging dir and renamed into ``extract/`` under an
-``epoch_NNNNN-`` prefix, replacing any files of an earlier attempt, and
-its metrics row is one file named by the epoch.
+Exactly-once comes from the two parts the *Structured Streaming* paper
+names: a write-ahead record of each epoch's input, written before the
+epoch runs (``epochs/epoch_NNNNN.json``), and sinks keyed by epoch id.
+The epoch's extract files are written to a staging dir and renamed into
+``extract/`` under an ``epoch_NNNNN-`` prefix, replacing any files of
+an earlier attempt, and its metrics row is one file named by the epoch,
+written last as the epoch's commit.  An epoch planned but not committed
+is replayed on its recorded files by the next call.
 
 The bounded task queue / backpressure (``Client.java:17``,
-``ArrayBlockingQueue(10000)``) has no code here at all:
-``maxFilesPerTrigger`` makes each arrived file one epoch, and a pass
-drains the backlog epoch by epoch.  One epoch per poll is not attempted
-here: ``streaming_microbatch_epochs``'s oracle pins one epoch per file,
-the streaming modules ``partials``, ``snapshot_state`` and ``upsert``
-share ``read_change_stream``, and a poller that keeps up (the live
+``ArrayBlockingQueue(10000)``) has no code here at all: each arrived
+file is one epoch, and a call drains the backlog epoch by epoch.  One
+epoch per poll is not attempted here: ``streaming_microbatch_epochs``'s
+oracle pins one epoch per file, and a poller that keeps up (the live
 case) never has a backlog above one file.
 
-Every streaming query in the package runs as one bounded pass through
-``run_available_now``: it drains what has arrived, is stopped if it
-outlives its timeout, and leaves nothing running.  A stopped pass loses
-nothing — its uncommitted epoch is replayed by the next pass on the
-same checkpoint, and the idempotent epoch outputs keep that replay
-exactly-once.
+Every streaming query in the package (the state-store passes below,
+and ``partials``, ``snapshot_state`` and ``upsert``) runs as one
+bounded pass through ``run_available_now``: it drains what has
+arrived, is stopped if it outlives its timeout, and leaves nothing
+running.  A stopped pass loses nothing — its uncommitted epoch is
+replayed by the next pass on the same checkpoint.
 
 Scale: each epoch is a distributed job over the files' row groups; the
-per-epoch metrics are one driver-side row per epoch (O(epochs), not
-O(rows)), published as one small file per epoch on a driver-local
-path.  The observed distinct-txn set holds one epoch's transaction
-ids, the set the reference's worker looks up.  At 100 TB the identical
-pipeline runs with the feed dir on object storage, polled on the
-caller's cadence.  Only ``out_dir`` must be a filesystem the driver
-mounts: the metrics files and the extract publish are driver-side
-renames (on object storage the publish becomes a Hadoop ``FileSystem``
-rename).
+plans and per-epoch metrics are one driver-side file each per epoch
+(O(epochs), not O(rows)) on a driver-local path.  The observed
+distinct-txn set holds one epoch's transaction ids, the set the
+reference's worker looks up.  At 100 TB the identical pipeline runs
+with the feed dir on object storage (listed through ``pyarrow.fs``),
+polled on the caller's cadence.  Only ``out_dir`` must be a filesystem
+the driver mounts: the plans, the metrics files and the extract publish
+are driver-side renames (on object storage the publish becomes a
+Hadoop ``FileSystem`` rename).
 """
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
+import time
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -72,13 +76,13 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..sinks import write_pipe_text
 
-# How long one pass may run before run_available_now stops it.  Only
-# run_cdc_pipeline takes its own bound (the run CLI's
-# --run-duration-min).
+# How long one pass may run before run_available_now stops it, and
+# run_cdc_pipeline's default bound (the run CLI's --run-duration-min
+# sets its own).
 PASS_TIMEOUT_SEC = 180
 
 # Fixed mtime base for feed files (any value works — only the ORDER
-# matters to the file source; a constant keeps reruns identical).
+# matters to the feed listing; a constant keeps reruns identical).
 _FEED_MTIME_BASE = 1_700_000_000
 
 # The derived change-feed record (sources/changes.py, FIXTURES.md §2).
@@ -160,8 +164,8 @@ def write_feed_batches(changes: DataFrame, feed_dir: str, n_batches: int) -> lis
         )
         bdir = os.path.join(feed_dir, f"batch_{i:05d}")
         batch.coalesce(1).write.mode("overwrite").parquet(bdir)
-        # Stamp strictly increasing mtimes: the file streaming source
-        # orders files by (modification time, path), and sub-second
+        # Stamp strictly increasing mtimes: feeds are read in
+        # (modification time, path) order, and sub-second
         # writes tie — stamping batch i at base+i seconds pins the
         # file→epoch order deterministically, so epoch 0 always scans
         # batch_00000 (and the per-epoch metrics become oracle-stable).
@@ -273,6 +277,55 @@ def _publish_epoch_extract(staging: str, extract_dir: str, epoch_id: int) -> Non
     shutil.rmtree(staging)
 
 
+def _list_feed(feed_dir: str) -> tuple[str, list[str]]:
+    """List the feed on the driver: its base path and its visible files,
+    relative to it, in arrival order.
+
+    The file source's rules: a path with a component under the feed
+    root that starts with ``_`` or ``.`` is hidden (``_SUCCESS``,
+    ``.crc`` checksums, a writer's ``_temporary/``), and files arrive
+    in ``(modification time, path)`` order.  ``feed_dir`` is a local
+    path or a URI (``FileSystem.from_uri``); no Spark job, no JVM call.
+    """
+    from pyarrow import fs as pafs
+
+    if ":" not in feed_dir.split("/", 1)[0]:
+        feed_dir = os.path.abspath(feed_dir)
+    filesystem, root = pafs.FileSystem.from_uri(feed_dir)
+    infos = filesystem.get_file_info(
+        pafs.FileSelector(root, allow_not_found=True, recursive=True)
+    )
+    files = []
+    for info in infos:
+        rel = info.path[len(root.rstrip("/")) + 1 :]
+        if info.type == pafs.FileType.File and not any(
+            c.startswith(("_", ".")) for c in rel.split("/")
+        ):
+            files.append((info.mtime_ns, rel))
+    return feed_dir.rstrip("/"), [rel for _, rel in sorted(files)]
+
+
+def _read_plans(epochs_dir: str) -> dict[int, list[str]]:
+    """Every planned epoch's feed files, keyed by epoch id."""
+    plans = {}
+    for name in os.listdir(epochs_dir):
+        if name.startswith("epoch_") and name.endswith(".json"):
+            with open(os.path.join(epochs_dir, name)) as f:
+                plan = json.load(f)
+            plans[plan["epoch_id"]] = plan["files"]
+    return plans
+
+
+def _write_plan(epochs_dir: str, epoch_id: int, files: list[str]) -> None:
+    """Record epoch ``epoch_id``'s input before it runs: a temp file
+    renamed into place, so a plan is either whole or absent."""
+    name = f"epoch_{epoch_id:05d}.json"
+    tmp = os.path.join(epochs_dir, f".{name}.tmp")
+    with open(tmp, "w") as f:
+        json.dump({"epoch_id": epoch_id, "files": files}, f)
+    os.replace(tmp, os.path.join(epochs_dir, name))
+
+
 def run_cdc_pipeline(
     spark: SparkSession,
     feed_dir: str,
@@ -281,11 +334,20 @@ def run_cdc_pipeline(
     tables: tuple[str, ...] | None = None,
     on_epoch: Callable[[dict], None] | None = None,
 ) -> list[dict]:
-    """Run the full §3.3 epoch body over every available batch and
-    return the per-epoch metrics rows, read on the driver (every epoch
-    so far, not just this call's), in epoch order.
+    """Run the full §3.3 epoch body over every feed file not yet
+    extracted and return the per-epoch metrics rows, read on the driver
+    (every epoch so far, not just this call's), in epoch order.
 
-    Per epoch (``foreachBatch``), one Spark job:
+    Epochs are planned on the driver, one per feed file in arrival
+    order: before epoch E runs, its file list is written to
+    ``out_dir/epochs/epoch_E.json`` (the write-ahead record), and a
+    file named in any plan has been seen.  An epoch's metrics row is
+    written last, so it is the epoch's commit.  On entry every planned
+    epoch without a metrics row is replayed on its recorded files, then
+    each unseen file is planned and run.  A call that finds nothing new
+    lists the feed and returns without touching Spark.
+
+    Per epoch, one Spark job over a batch read of its files:
     1. A10: write the stringified extract, demuxed by table (B1), to
        ``out_dir/staging/epoch_{id}``, then publish its files into
        ``out_dir/extract`` — the ``chunk*`` files;
@@ -294,29 +356,38 @@ def run_cdc_pipeline(
        published as the epoch's own file under ``out_dir/metrics`` —
        the watermark advance.
 
-    A replayed epoch (at-least-once ``foreachBatch``) replaces its
-    extract files and its metrics row, so both stay exactly-once.
+    A replayed epoch replaces its extract files and its metrics row, so
+    both stay exactly-once.
 
     ``on_epoch``, if given, receives each metrics row this call
     extracted, as a dict, in epoch order — the freshness of exactly
     this pass, with no second read.
 
     ``tables`` is the monitored-group restriction (-Dtables,
-    ``Config.java:8-27``) applied as an ``In`` filter on the stream —
+    ``Config.java:8-27``) applied as an ``In`` filter on the read —
     pushed to the scan, never interpolated into SQL text.
 
-    ``timeout_sec`` bounds the pass (the run CLI's
-    ``--run-duration-min``).  A pass that outlives it is stopped; the
-    next call on the same ``out_dir`` resumes from the checkpoint and
-    replays the interrupted epoch, exactly-once.
+    ``timeout_sec`` bounds the call (the run CLI's
+    ``--run-duration-min``): no epoch starts after it, and an epoch that
+    has started runs to completion.  The next call on the same
+    ``out_dir`` picks up the files left over.
     """
+    deadline = time.monotonic() + timeout_sec
     extract_dir = os.path.join(out_dir, "extract")
     staging_dir = os.path.join(out_dir, "staging")
     metrics_dir = os.path.join(out_dir, "metrics")
-    checkpoint_dir = os.path.join(out_dir, "checkpoint")
+    epochs_dir = os.path.join(out_dir, "epochs")
     os.makedirs(metrics_dir, exist_ok=True)
+    os.makedirs(epochs_dir, exist_ok=True)
 
-    def epoch_body(batch_df: DataFrame, epoch_id: int) -> None:
+    def run_epoch(epoch_id: int, paths: list[str]) -> None:
+        batch_df = (
+            spark.read.schema(CHANGES_SCHEMA)
+            .option("recursiveFileLookup", "true")
+            .parquet(*paths)
+        )
+        if tables:
+            batch_df = batch_df.filter(F.col("table_name").isin(*tables))
         # one Observation per epoch: an Observation reports only its
         # first action.  observe() rejects DISTINCT, hence the set size.
         obs = Observation()
@@ -336,12 +407,23 @@ def run_cdc_pipeline(
         if on_epoch is not None:
             on_epoch(row)
 
-    stream = read_change_stream(spark, feed_dir)
-    if tables:
-        stream = stream.filter(F.col("table_name").isin(*tables))
-    run_available_now(
-        stream.writeStream.foreachBatch(epoch_body), checkpoint_dir, timeout_sec
-    )
+    plans = _read_plans(epochs_dir)
+    committed = set(os.listdir(metrics_dir))
+    epochs = [
+        (e, plans[e])
+        for e in sorted(plans)
+        if f"epoch_{e:05d}.parquet" not in committed
+    ]
+    seen = {f for files in plans.values() for f in files}
+    base, arrived = _list_feed(feed_dir)
+    first_new = max(plans, default=-1) + 1
+    epochs += enumerate(([f] for f in arrived if f not in seen), first_new)
+    for epoch_id, files in epochs:
+        if time.monotonic() >= deadline:
+            break
+        if epoch_id >= first_new:
+            _write_plan(epochs_dir, epoch_id, files)
+        run_epoch(epoch_id, [f"{base}/{f}" for f in files])
     return read_epoch_metrics(metrics_dir)
 
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import ast
 import glob
+import json
 import os
 import re
 import shutil
@@ -89,10 +90,10 @@ def _publish(stage: str, feed: str, i: int) -> None:
 def test_cli_run_is_one_pass_with_driver_side_history(
     spark, staged, tmp_path, capsys, monkeypatch
 ):
-    """Each `run` is one streaming query; it prints the full epoch
-    history, staleness for only the epochs it extracted, a data epoch
-    is one Spark job (the metrics ride the extract write), and an idle
-    poll schedules no Spark job."""
+    """Each `run` is one pass with no StreamingQuery; it prints the full
+    epoch history, staleness for only the epochs it extracted, a data
+    epoch is one Spark job (the metrics ride the extract write), and an
+    idle poll schedules no Spark job."""
     from pyspark.sql.streaming.readwriter import DataStreamWriter
 
     started = []
@@ -113,12 +114,11 @@ def test_cli_run_is_one_pass_with_driver_side_history(
     capsys.readouterr()
 
     _publish(staged, feed, 2)
-    started.clear()
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
     assert main(argv) == 0
     out2 = capsys.readouterr().out
-    assert len(started) == 1
-    tracker = spark.sparkContext.statusTracker()
-    assert len(tracker.getJobIdsForGroup(str(started[0].runId))) == 1
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 1
     epochs = {int(e): v for e, v in _EPOCH.findall(out2)}
     assert sorted(epochs) == [0, 1, 2]
     now_ms = max(int(v) for v in epochs.values() if v != "None")
@@ -128,12 +128,10 @@ def test_cli_run_is_one_pass_with_driver_side_history(
         assert int(lag) == now_ms - int(epochs[int(b)])
 
     before = set(tracker.getJobIdsForGroup(None))
-    started.clear()
     assert main(argv) == 0
     out3 = capsys.readouterr().out
     assert set(tracker.getJobIdsForGroup(None)) - before == set()
-    assert len(started) == 1
-    assert tracker.getJobIdsForGroup(str(started[0].runId)) == []
+    assert started == []
     assert sorted(int(e) for e, _ in _EPOCH.findall(out3)) == [0, 1, 2]
     assert not _STALE.findall(out3)
 
@@ -149,9 +147,9 @@ def _extract_rows(out: str) -> dict[str, int]:
 
 
 def test_replayed_epoch_keeps_one_metrics_row(spark, staged, tmp_path):
-    """foreachBatch is at-least-once: an epoch whose commit was lost is
-    replayed on restart, and its metrics row and its extract files must
-    be replaced, not appended a second time."""
+    """An epoch whose commit was lost is replayed on restart, and its
+    metrics row and its extract files must be replaced, not appended a
+    second time."""
     from cdc_extractor_spark.streaming.pipeline import run_cdc_pipeline
 
     feed, out = str(tmp_path / "feed"), str(tmp_path / "out")
@@ -161,11 +159,9 @@ def test_replayed_epoch_keeps_one_metrics_row(spark, staged, tmp_path):
     assert sorted(first) == [0, 1]
     extracted = _extract_rows(out)
     assert sum(extracted.values()) == sum(r["n_rows"] for r in first.values())
-    commits = os.path.join(out, "checkpoint", "commits")
-    # drop the commit and its local-FS checksum together: an orphan
-    # .crc makes Spark's rewrite of the commit file fail
-    for name in ("1", ".1.crc"):
-        os.remove(os.path.join(commits, name))
+    # an epoch's metrics row is its commit: dropping it leaves epoch 1
+    # planned but uncommitted, as a crash after its extract would
+    os.remove(os.path.join(out, "metrics", "epoch_00001.parquet"))
     replayed: list[dict] = []
     again = run_cdc_pipeline(spark, feed, out, on_epoch=replayed.append)
     assert [r["epoch_id"] for r in replayed] == [1]
@@ -203,9 +199,10 @@ def _extract_lines(out: str) -> dict[tuple[str, str], Counter]:
 def test_timed_out_pass_is_stopped_and_resumes_exactly_once(
     spark, staged, tmp_path
 ):
-    """A pass that outlives its timeout is stopped, not left running,
-    and the next call on the same out dir resumes from the checkpoint:
-    its epochs and per-epoch extract files equal a fresh run's."""
+    """A pass that outlives its timeout starts no further epoch and
+    leaves nothing running, and the next call on the same out dir
+    extracts the rest: its epochs and per-epoch extract files equal a
+    fresh run's."""
     from cdc_extractor_spark.streaming.pipeline import run_cdc_pipeline
 
     feed, out, fresh_out = (str(tmp_path / d) for d in ("feed", "out", "fresh"))
@@ -224,6 +221,77 @@ def test_timed_out_pass_is_stopped_and_resumes_exactly_once(
         (r["epoch_id"], r["n_rows"]) for r in fresh
     ]
     assert _extract_lines(out) == _extract_lines(fresh_out)
+
+
+def test_sub_second_run_duration_is_a_bound_not_an_error(
+    spark, staged, tmp_path, capsys
+):
+    """``--run-duration-min`` is not rounded to whole seconds: a bound
+    of 0.06 s ends the pass early, and the next run extracts every
+    epoch."""
+    feed, out = str(tmp_path / "feed"), str(tmp_path / "out")
+    for i in range(3):
+        _publish(staged, feed, i)
+    argv = ["run", "--feed", feed, "--out", out, "--tables", "customer,orders"]
+    assert main(argv + ["--run-duration-min", "0.001"]) == 0
+    capsys.readouterr()
+    assert main(argv) == 0
+    out2 = capsys.readouterr().out
+    assert sorted(int(e) for e, _ in _EPOCH.findall(out2)) == [0, 1, 2]
+
+
+def _plans(out: str) -> dict[int, list[str]]:
+    plans = {}
+    for path in glob.glob(os.path.join(out, "epochs", "epoch_*.json")):
+        with open(path) as f:
+            plan = json.load(f)
+        plans[plan["epoch_id"]] = plan["files"]
+    return plans
+
+
+def test_uncommitted_epoch_replays_its_planned_files_only(spark, staged, tmp_path):
+    """The plan record, not the feed, says what an epoch covers: an
+    uncommitted epoch 1 replays only its own file although batch 2 has
+    arrived since, and batch 2 becomes epoch 2."""
+    from cdc_extractor_spark.streaming.pipeline import run_cdc_pipeline
+
+    feed, out, fresh_out = (str(tmp_path / d) for d in ("feed", "out", "fresh"))
+    for i in range(2):
+        _publish(staged, feed, i)
+    first = {r["epoch_id"]: r for r in run_cdc_pipeline(spark, feed, out)}
+    planned = _plans(out)
+    assert sorted(planned) == [0, 1]
+    assert all(len(files) == 1 for files in planned.values())
+    os.remove(os.path.join(out, "metrics", "epoch_00001.parquet"))
+    _publish(staged, feed, 2)
+    extracted: list[dict] = []
+    again = run_cdc_pipeline(spark, feed, out, on_epoch=extracted.append)
+    assert [r["epoch_id"] for r in extracted] == [1, 2]
+    assert extracted[0] == first[1]
+    assert {e: f for e, f in _plans(out).items() if e < 2} == planned
+    assert _plans(out)[2][0].startswith("batch_00002/")
+    fresh = run_cdc_pipeline(spark, feed, fresh_out)
+    assert again == fresh
+    assert _extract_lines(out) == _extract_lines(fresh_out)
+
+
+def test_hidden_feed_files_are_never_planned(spark, staged, tmp_path):
+    """The feed listing follows the file source's hidden-path rule: a
+    ``_SUCCESS`` marker, a ``.crc`` checksum and a parquet file under a
+    writer's ``_temporary/`` dir are never planned or read."""
+    from cdc_extractor_spark.streaming.pipeline import run_cdc_pipeline
+
+    feed, out = str(tmp_path / "feed"), str(tmp_path / "out")
+    _publish(staged, feed, 0)
+    (part,) = glob.glob(os.path.join(feed, "batch_00000", "*.parquet"))
+    tmp_dir = os.path.join(feed, "_temporary", "0")
+    os.makedirs(tmp_dir)
+    shutil.copy(part, tmp_dir)
+    for name in ("_SUCCESS", ".part-00000.parquet.crc"):
+        Path(feed, name).write_text("")
+    rows = run_cdc_pipeline(spark, feed, out)
+    assert [r["n_rows"] for r in rows] == [spark.read.parquet(part).count()]
+    assert _plans(out) == {0: [os.path.relpath(part, feed)]}
 
 
 def test_every_streaming_pass_goes_through_the_runner():

@@ -45,7 +45,7 @@ def test_epochs_cover_exact_offset_ranges(spark, feed, tmp_path):
     feed_dir, ranges, changes = feed
     metrics = run_cdc_pipeline(spark, feed_dir, str(tmp_path / "out"))
     rows = sorted(metrics, key=lambda r: r["min_event_id"])
-    assert len(rows) == N_BATCHES  # maxFilesPerTrigger=1 → one epoch per file
+    assert len(rows) == N_BATCHES  # one epoch per feed file
     # each epoch processed exactly its file's (lo, hi] range
     for row, (lo, hi) in zip(rows, ranges):
         assert lo < row["min_event_id"] <= row["max_event_id"] <= hi
@@ -195,10 +195,10 @@ def test_late_rows_beyond_watermark_are_dropped(spark, tmp_path):
 
 
 def test_pipeline_restart_processes_only_new_files(spark, feed, tmp_path):
-    """Checkpoint resumption: a second availableNow run over the same
-    checkpoint must process only files that arrived since — the
-    exactly-once offset tracking the reference approximated with its
-    in-memory maxSeqID (lost on crash; ours is durable)."""
+    """Resumption: a second run on the same out dir must process only
+    files that arrived since — the exactly-once offset tracking the
+    reference approximated with its in-memory maxSeqID (lost on crash;
+    ours is the durable plan record)."""
     import shutil
 
     feed_dir, _, changes = feed
@@ -209,7 +209,7 @@ def test_pipeline_restart_processes_only_new_files(spark, feed, tmp_path):
     m1 = run_cdc_pipeline(spark, feed2, out)
     n1 = len(m1)
     assert n1 == N_BATCHES
-    # one new file arrives; restart on the same checkpoint
+    # one new file arrives; run again on the same out dir
     extra = changes.limit(0).unionByName(
         changes.orderBy(F.desc("event_id")).limit(10)
         .withColumn("event_id", F.col("event_id") + 1_000_000_000)
