@@ -2,24 +2,31 @@
 
 Several queries build derived artifacts from the read-only fixtures —
 bucketed table copies, partitioned DPP layouts, binary-blob corpora,
-trained ANN indexes.  They are built ONCE per fixture identity and
-reused so timed runs measure the query, not setup (the reference, by
-contrast, re-extracts per run: WorkerRunnable.java:93-94 rescans the
-audit table for every task).
+derived change feeds, trained ANN indexes.  They are built ONCE per
+fixture identity and reused so timed runs measure the query, not setup
+(the reference, by contrast, re-extracts per run: WorkerRunnable.java:
+93-94 rescans the audit table for every task).
 
-Shared discipline:
-- cache key = sha1(realpath + size + mtime_ns of the source fixture
-  [+ builder params/version]) — a regenerated fixture or a
-  same-basename different path gets a fresh dir, never stale data;
+``cached_dir`` is the only build path for such a directory:
+- cache key = ``fixture_key``: sha1 over each source table's realpath,
+  size and mtime_ns plus a tag naming every builder parameter — a
+  regenerated fixture, a same-basename different path or a different
+  builder setting gets a fresh dir, never stale data;
 - build into a private staging dir, publish with ONE atomic os.rename
   — concurrent first builds race harmlessly, readers only ever see a
   complete directory;
+- a build that raises leaves nothing behind: its staging dir is
+  removed and nothing is published;
 - on rename failure the loser cleans its staging up, and then VERIFIES
   the destination exists: losing the publish race is fine (the winner's
   dir is there), but any other rename failure (cross-device tempdir,
   permissions) must raise instead of leaving a dangling path that a
   later `CREATE TABLE ... LOCATION` would materialize as a silently
   empty table.
+
+Catalog names over un-copied fixtures take the same ``fixture_key``.
+Every cache lives under the temp dir with a ``cdcx_`` prefix, so
+``rm -rf /tmp/cdcx_*`` clears them all.
 """
 
 from __future__ import annotations
@@ -29,37 +36,48 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable, Sequence
 
 
-def fixture_key(sf_dir: str, table: str, tag: str = "") -> str:
-    """Identity hash of one fixture file (+ an optional builder tag)."""
-    st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-    return hashlib.sha1(
-        f"{os.path.realpath(sf_dir)}|{tag}|{st.st_size}|{st.st_mtime_ns}"
-        .encode()
-    ).hexdigest()[:16]
+def fixture_key(sf_dir: str, tables: Sequence[str], tag: str = "") -> str:
+    """Identity hash of the fixture files ``tables`` (+ a builder tag)."""
+    parts = [tag]
+    for t in tables:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        st = os.stat(path)
+        parts.append(f"{os.path.realpath(path)}:{st.st_size}:{st.st_mtime_ns}")
+    return hashlib.sha1("|".join(parts).encode()).hexdigest()[:16]
 
 
-def cache_dir(prefix: str, key: str) -> str:
-    return os.path.join(tempfile.gettempdir(), f"{prefix}_{key}")
-
-
-def staging_dir(dest: str) -> str:
-    return dest + ".tmp." + uuid.uuid4().hex
-
-
-def publish_dir(staging: str, dest: str) -> None:
-    """Atomically publish ``staging`` as ``dest``; loser cleans up.
-
-    Raises if, after a failed rename, ``dest`` still does not exist —
-    i.e. the failure was NOT a lost race to a concurrent winner.
-    """
+def cached_dir(
+    prefix: str,
+    sf_dir: str,
+    tables: Sequence[str],
+    tag: str,
+    build: Callable[[str], None],
+) -> str:
+    """The directory ``<tempdir>/<prefix>_<fixture_key>``, built on a
+    miss by ``build(staging)`` into a fresh private dir that is then
+    published by one atomic rename."""
+    dest = os.path.join(
+        tempfile.gettempdir(), f"{prefix}_{fixture_key(sf_dir, tables, tag)}"
+    )
+    if os.path.isdir(dest):
+        return dest
+    staging = f"{dest}.tmp.{uuid.uuid4().hex}"
+    os.makedirs(staging)
     try:
-        os.rename(staging, dest)
-    except OSError:
+        build(staging)
+        try:
+            os.rename(staging, dest)
+        except OSError:
+            # a lost race to a concurrent build is fine (the winner's
+            # dir is complete); any other failure leaves no dest
+            if not os.path.isdir(dest):
+                raise
+    finally:
         shutil.rmtree(staging, ignore_errors=True)
-        if not os.path.isdir(dest):
-            raise
+    return dest
 
 
 def publish_snapshot(version_dir: str, link_path: str) -> None:

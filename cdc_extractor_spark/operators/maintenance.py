@@ -26,7 +26,6 @@ pruning, so the engine ships them as first-class verbs:
 from __future__ import annotations
 
 import math
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -197,30 +196,16 @@ def compact_parquet(
 # Bucketed (co-located) storage layout — shuffle-free fact⋈fact joins
 # ---------------------------------------------------------------------------
 
-def _bucketed_table_name(prefix: str, sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    stats = []
-    for t in ("orders", "lineitem"):
-        st = os.stat(os.path.join(sf_dir, f"{t}.parquet"))
-        stats.append(f"{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.sha1(
-        f"{os.path.realpath(sf_dir)}|{'|'.join(stats)}".encode()
-    ).hexdigest()[:12]
-    return f"cdcx_bkt_{key}_{prefix}"
-
-
 def ensure_bucketed_tables(
     spark: SparkSession, sf_dir: str, n_buckets: int = 8
 ) -> tuple[str, str]:
     """Materialize ``orders`` and ``lineitem`` as bucketed tables
     (CLUSTERED BY order key INTO ``n_buckets`` BUCKETS, sorted within
-    buckets) under a fixture-keyed tmp location, registering them in
-    the session catalog.  Idempotent two ways: the files are written
-    once per fixture identity (atomic-rename publish, same contract as
-    the derived-feed cache), and a fresh session that finds the files
-    already on disk only (re)issues the external-table DDL.
+    buckets) in a cache.cached_dir directory, registering each in the
+    session catalog under the directory's name.  Idempotent two ways:
+    the files are written once per (fixture identity, ``n_buckets``),
+    and a fresh session that finds the files already on disk only
+    (re)issues the external-table DDL.
 
     This is THE layout move for repeated 100 TB fact⋈fact joins: both
     sides hash-partitioned AND sorted by the join key at WRITE time,
@@ -232,36 +217,37 @@ def ensure_bucketed_tables(
     (WorkerRunnable.java:93-94 rescans the audit table each task).
     """
     import os
-    import tempfile
 
     from .. import cache
     from ..io import load_table
 
     names = {}
     for tbl, key in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
-        name = _bucketed_table_name(tbl, sf_dir)
-        names[tbl] = name
-        if spark.catalog.tableExists(name):
-            continue
-        d = os.path.join(tempfile.gettempdir(), name)
-        df = load_table(spark, sf_dir, tbl)
-        if not os.path.isdir(d):
-            staging = d + ".tmp." + uuid.uuid4().hex
+
+        def build(staging: str) -> None:
+            # bucketBy needs a catalog table: write one over the staging
+            # dir under a throwaway name, then drop it (external, so the
+            # files stay) and re-point the final name below
+            tmp = os.path.basename(staging).replace(".", "_")
             (
-                df.write.format("parquet")
+                load_table(spark, sf_dir, tbl).write.format("parquet")
                 .bucketBy(n_buckets, key)
                 .sortBy(key)
                 .option("path", staging)
                 .mode("overwrite")
-                .saveAsTable(name)
+                .saveAsTable(tmp)
             )
-            spark.sql(f"DROP TABLE IF EXISTS {name}")  # re-point below
-            # publish_dir raises unless the target exists (lost race):
-            # a dangling LOCATION below would otherwise materialize as
-            # a silently EMPTY bucketed table and zero-row joins.
-            cache.publish_dir(staging, d)
+            spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+
+        d = cache.cached_dir(
+            f"cdcx_bkt_{tbl}", sf_dir, (tbl,), f"{key}|b{n_buckets}", build
+        )
+        name = names[tbl] = os.path.basename(d)
+        if spark.catalog.tableExists(name):
+            continue
         cols = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in load_table(spark, sf_dir, tbl).schema.fields
         )
         spark.sql(
             f"CREATE TABLE {name} ({cols}) USING PARQUET "
@@ -314,13 +300,13 @@ def ensure_stats_tables(
     At 100 TB this is routine warehouse hygiene: ANALYZE after load,
     and every multi-join query gets stats-driven join ordering instead
     of written-order left-deep plans."""
-    import hashlib
     import os
 
-    key = hashlib.sha1(os.path.realpath(sf_dir).encode()).hexdigest()[:12]
+    from .. import cache
+
     names = {}
     for t in tables:
-        name = f"cdcx_stats_{key}_{t}"
+        name = f"cdcx_stats_{cache.fixture_key(sf_dir, (t,))}_{t}"
         names[t] = name
         if spark.catalog.tableExists(name):
             continue
@@ -389,22 +375,12 @@ def ensure_partitioned_events(
 ) -> tuple[str, str]:
     """Fixture-keyed, write-once layout for the DPP demo: the events
     feed partitioned by event_type (hive-style directories) plus a tiny
-    category dimension as parquet.  Same atomic-rename publish contract
-    as the other derived-fixture caches."""
-    import hashlib
-    import os
-    import tempfile
-
+    category dimension as parquet, built by cache.cached_dir like the
+    other derived-fixture caches."""
     from .. import cache
     from ..io import load_table
 
-    st = os.stat(os.path.join(sf_dir, "events.parquet"))
-    key = hashlib.sha1(
-        f"{os.path.realpath(sf_dir)}|dpp|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:16]
-    d = os.path.join(tempfile.gettempdir(), f"cdcx_dpp_{key}")
-    if not os.path.isdir(d):
-        staging = d + ".tmp." + uuid.uuid4().hex
+    def build(staging: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type",
             F.round(F.col("value") * 100).cast("long").alias("value_cents"),
@@ -413,7 +389,8 @@ def ensure_partitioned_events(
         spark.createDataFrame(
             list(EVENT_CATEGORIES), "event_type string, category string"
         ).coalesce(1).write.parquet(staging + "/dim")
-        cache.publish_dir(staging, d)
+
+    d = cache.cached_dir("cdcx_dpp", sf_dir, ("events",), "", build)
     return d + "/fact", d + "/dim"
 
 

@@ -112,6 +112,18 @@ EPOCH_METRICS_SCHEMA = T.StructType(
 )
 
 
+def _stamp_batch_mtime(batch_dir: str, i: int) -> None:
+    """Stamp every file of batch ``i`` at ``_FEED_MTIME_BASE + i``
+    seconds.  Feeds are read in (modification time, path) order and
+    sub-second writes tie, so strictly increasing stamps pin the
+    file→epoch order: epoch 0 always scans batch_00000, and the
+    per-epoch metrics become oracle-stable."""
+    t = _FEED_MTIME_BASE + i
+    for root, _, files in os.walk(batch_dir):
+        for fn in files:
+            os.utime(os.path.join(root, fn), (t, t))
+
+
 def write_feed_batches(changes: DataFrame, feed_dir: str, n_batches: int) -> list[tuple[int, int]]:
     """Materialize the change stream as ``n_batches`` arrival files in
     ``event_id`` order — the test-time stand-in for the audit table
@@ -164,15 +176,7 @@ def write_feed_batches(changes: DataFrame, feed_dir: str, n_batches: int) -> lis
         )
         bdir = os.path.join(feed_dir, f"batch_{i:05d}")
         batch.coalesce(1).write.mode("overwrite").parquet(bdir)
-        # Stamp strictly increasing mtimes: feeds are read in
-        # (modification time, path) order, and sub-second
-        # writes tie — stamping batch i at base+i seconds pins the
-        # file→epoch order deterministically, so epoch 0 always scans
-        # batch_00000 (and the per-epoch metrics become oracle-stable).
-        t = _FEED_MTIME_BASE + i
-        for root, _, files in os.walk(bdir):
-            for fn in files:
-                os.utime(os.path.join(root, fn), (t, t))
+        _stamp_batch_mtime(bdir, i)
         ranges.append((lo, hi))
         prev = hi
     return ranges
@@ -818,10 +822,7 @@ def write_embedding_batches(
             .write.mode("overwrite")
             .parquet(bdir)
         )
-        t = _FEED_MTIME_BASE + i
-        for root, _, files in os.walk(bdir):
-            for fn in files:
-                os.utime(os.path.join(root, fn), (t, t))
+        _stamp_batch_mtime(bdir, i)
 
 
 def run_ivf_maintenance(
