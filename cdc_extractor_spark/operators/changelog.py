@@ -15,7 +15,7 @@ Determinism conventions for the DuckDB oracle (SURVEY.md §5.2):
 - ``sort_array(collect_set(...))``, never bare ``collect_set``.
 
 Every function is pure ``DataFrame → DataFrame`` so the same operator
-serves batch queries and the ``foreachBatch`` streaming epoch body
+serves batch queries and the streaming epoch bodies
 (streaming/pipeline.py).
 """
 

@@ -1848,7 +1848,7 @@ def _derived_feed(spark: SparkSession, sf_dir: str, kind: str) -> str:
     )
 
 
-# The streaming demos run on these tiny feeds inside
+# The state-store demos run on these tiny feeds inside
 # scoped_shuffle_partitions(spark, 4): the state store allocates one
 # instance per shuffle partition per epoch, so the session's default
 # count is pure overhead here.  Each demo uses a fresh checkpoint, and a
@@ -2939,7 +2939,7 @@ ORACLES["streaming_stateful_snapshot"] = (
 
 def q_streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MERGE-style snapshot maintenance (streaming/upsert.py):
-    a ``foreachBatch`` loop folds each epoch of the cust2k feed into a
+    a driver-planned epoch loop folds each epoch of the cust2k feed into a
     parquet snapshot — latest-per-key over the batch, left-anti against
     the current snapshot, union, drop deletes, atomic directory swap.
     Returns the FINAL snapshot relation; the oracle recomputes the end
@@ -2953,8 +2953,7 @@ def q_streaming_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = tempfile.mkdtemp(prefix="stream_upsert_")
     feed = _derived_feed(spark, sf_dir, "cust2k2")
-    with scoped_shuffle_partitions(spark, 4):
-        return run_incremental_snapshot(spark, feed, work)
+    return run_incremental_snapshot(spark, feed, work)
 
 
 QUERIES["streaming_upsert_snapshot"] = q_streaming_upsert_snapshot
@@ -3001,8 +3000,7 @@ def q_streaming_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     work = tempfile.mkdtemp(prefix="stream_bm_")
     feed = _derived_feed(spark, sf_dir, "cust2k2")
-    with scoped_shuffle_partitions(spark, 4):
-        return run_incremental_bitmap_distinct(spark, feed, work)
+    return run_incremental_bitmap_distinct(spark, feed, work)
 
 
 QUERIES["streaming_bitmap_distinct"] = q_streaming_bitmap_distinct
@@ -7618,7 +7616,7 @@ def q_streaming_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cell serving snapshot.  The oracle recomputes every epoch's
     snapshot from the raw corpus, so the value-hash match proves
     merge ≡ rebuild at each epoch — ivf_index_merge's contract run
-    through a live StreamingQuery lifecycle."""
+    through a live epoch loop (streaming/pipeline.py:run_epochs)."""
     import tempfile
 
     from . import cache
@@ -7631,14 +7629,13 @@ def q_streaming_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     work = tempfile.mkdtemp(prefix="ivf_maint_")
-    with scoped_shuffle_partitions(spark, 4):
-        return run_ivf_maintenance(spark, feed, work + "/out")
+    return run_ivf_maintenance(spark, feed, work + "/out")
 
 
 QUERIES["streaming_ivf_maintenance"] = q_streaming_ivf_maintenance
 # Epoch e's cumulative membership is pure arithmetic (contiguous
 # thirds over dense vec_ids: bkt = least(vec_id·3 div n, 2), batch
-# mtimes pin file→epoch order, maxFilesPerTrigger=1), so DuckDB
+# mtimes pin file→epoch order, one epoch per file), so DuckDB
 # rebuilds each epoch's index from scratch while Spark MERGED it
 # incrementally — hash equality is the merge ≡ rebuild proof, per
 # epoch.  Micros arithmetic mirrors the ann_ivf_index_merge oracle

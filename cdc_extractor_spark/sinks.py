@@ -43,8 +43,8 @@ def write_pipe_text(
     """Write the pipe-delimited extract (``chunk*`` files), replacing
     anything at ``path``.
 
-    The streaming ``foreachBatch`` epoch body writes each epoch to its
-    own staging dir and publishes the files under an epoch-keyed name
+    The ``run`` epoch body writes each epoch to its own staging dir and
+    publishes the files under an epoch-keyed name
     (``streaming/pipeline.py``) — the analog of the reference's
     per-task appends, but idempotent under replay.
     """

@@ -1,5 +1,6 @@
 """Incremental EXACT distinct-count maintenance over a change stream —
-bitmap partials merged per epoch via ``foreachBatch``.
+bitmap partials merged per epoch on ``run_epochs``' driver-planned
+epochs.
 
 The batch twin (functions/sketches.py: bitmap_distinct_rollup) shows the
 layout; this module shows the reason the layout exists: per epoch, the
@@ -19,15 +20,13 @@ the same way this merges epoch partials.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import cache
-from .pipeline import read_change_stream, run_available_now
+from .upsert import maintain_table
 
 PARTIAL_COLS = ("action", "bucket", "bm")
+_PARTIAL_SCHEMA = "action string, bucket long, bm binary"
 
 
 def epoch_partials(batch: DataFrame) -> DataFrame:
@@ -58,31 +57,13 @@ def run_incremental_bitmap_distinct(
 ) -> DataFrame:
     """Maintain the bitmap-partial table across every available epoch;
     returns the final per-action exact distinct-key counts."""
-    part_dir = os.path.join(out_dir, "partials")
-    checkpoint_dir = os.path.join(out_dir, "bm_checkpoint")
-
-    def epoch_body(batch_df: DataFrame, epoch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        stored = (
-            spark_l.read.parquet(part_dir) if os.path.exists(part_dir) else None
-        )
-        merged = merge_partials(stored, epoch_partials(batch_df)).select(
-            *PARTIAL_COLS
-        )
-        version = part_dir + f".v{epoch_id}"
-        merged.write.mode("overwrite").parquet(version)
-        # crash-safe pointer swap (cache.publish_snapshot): the partial
-        # table is never absent mid-publish, so a crash+replay merges
-        # into the PREVIOUS state (idempotent OR) instead of restarting
-        # from one epoch.
-        cache.publish_snapshot(version, part_dir)
-
-    run_available_now(
-        read_change_stream(spark, feed_dir).writeStream.foreachBatch(epoch_body),
-        checkpoint_dir,
-    )
     return (
-        spark.read.parquet(part_dir)
+        maintain_table(
+            spark, feed_dir, out_dir, "partials", _PARTIAL_SCHEMA,
+            lambda stored, batch: merge_partials(
+                stored, epoch_partials(batch)
+            ).select(*PARTIAL_COLS),
+        )
         .groupBy("action")
         .agg(F.sum(F.bitmap_count("bm")).alias("n_distinct_keys"))
     )

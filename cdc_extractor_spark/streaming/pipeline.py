@@ -26,13 +26,11 @@ Mapping (SURVEY.md §3):
   (§2 bug list).
 
 Exactly-once comes from the two parts the *Structured Streaming* paper
-names: a write-ahead record of each epoch's input, written before the
-epoch runs (``epochs/epoch_NNNNN.json``), and sinks keyed by epoch id.
-The epoch's extract files are written to a staging dir and renamed into
-``extract/`` under an ``epoch_NNNNN-`` prefix, replacing any files of
-an earlier attempt, and its metrics row is one file named by the epoch,
-written last as the epoch's commit.  An epoch planned but not committed
-is replayed on its recorded files by the next call.
+names: a replayable source (``run_epochs``' plan and commit records
+under ``epochs/``) and sinks keyed by epoch id.  The epoch's extract
+files are staged and renamed into ``extract/`` under an
+``epoch_NNNNN-`` prefix, replacing any files of an earlier attempt, and
+its metrics row is one file named by the epoch.
 
 The bounded task queue / backpressure (``Client.java:17``,
 ``ArrayBlockingQueue(10000)``) has no code here at all: each arrived
@@ -41,12 +39,11 @@ epoch per poll is not attempted here: ``streaming_microbatch_epochs``'s
 oracle pins one epoch per file, and a poller that keeps up (the live
 case) never has a backlog above one file.
 
-Every streaming query in the package (the state-store passes below,
-and ``partials``, ``snapshot_state`` and ``upsert``) runs as one
-bounded pass through ``run_available_now``: it drains what has
-arrived, is stopped if it outlives its timeout, and leaves nothing
-running.  A stopped pass loses nothing — its uncommitted epoch is
-replayed by the next pass on the same checkpoint.
+Passes that keep no engine state run on ``run_epochs``.  Passes whose
+state the engine keeps (dedup, joins, windows, sessions,
+``snapshot_state``) or that read a streaming source (``sources/pyds.py``)
+run as one bounded pass through ``run_available_now``; a stopped pass's
+uncommitted epoch is replayed by the next pass on the same checkpoint.
 
 Scale: each epoch is a distributed job over the files' row groups; the
 plans and per-epoch metrics are one driver-side file each per epoch
@@ -72,7 +69,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..sinks import write_pipe_text
 
@@ -198,7 +195,7 @@ def run_available_now(
     writer: DataStreamWriter,
     checkpoint_dir: str,
     timeout_sec: float = PASS_TIMEOUT_SEC,
-) -> StreamingQuery:
+) -> None:
     """Run ``writer`` as one bounded pass on ``checkpoint_dir``: start
     it with ``trigger(availableNow=True)``, wait up to ``timeout_sec``
     for it to drain every file that arrived since the checkpoint's last
@@ -207,8 +204,7 @@ def run_available_now(
     checkpoint, which replays it.
 
     No query outlives the call.  A pass that finishes on its own is not
-    touched again, so the runner adds no Spark job.  The returned query
-    has terminated; its ``recentProgress`` stays readable.
+    touched again, so the runner adds no Spark job.
     """
     q = (
         writer.option("checkpointLocation", checkpoint_dir)
@@ -220,7 +216,6 @@ def run_available_now(
     finally:
         if q.isActive:
             q.stop()
-    return q
 
 
 def _append_parquet(df: DataFrame, result_dir: str, checkpoint_dir: str) -> None:
@@ -330,6 +325,50 @@ def _write_plan(epochs_dir: str, epoch_id: int, files: list[str]) -> None:
     os.replace(tmp, os.path.join(epochs_dir, name))
 
 
+def run_epochs(
+    spark: SparkSession,
+    feed_dir: str,
+    epochs_dir: str,
+    schema: T.StructType,
+    body: Callable[[DataFrame, int], None],
+    timeout_sec: float = PASS_TIMEOUT_SEC,
+) -> None:
+    """Call ``body(batch_df, epoch_id)`` once per feed file, in arrival
+    order, exactly once across calls on the same ``epochs_dir``.
+
+    Before epoch E runs, its file list is written to
+    ``epochs_dir/epoch_E.json`` (a file named in any plan has been seen);
+    after ``body`` returns, an empty ``epoch_E.done`` commits it.  On
+    entry every planned epoch without a commit is replayed on its
+    recorded files, then each unseen file becomes one new epoch.  A
+    call that finds nothing new starts no Spark job.  ``batch_df`` is a
+    batch read of the epoch's files; ``body`` writes only outputs keyed
+    by ``epoch_id``, so a replay replaces them.  No epoch starts after
+    ``timeout_sec``; the next call picks up the rest.
+    """
+    deadline = time.monotonic() + timeout_sec
+    os.makedirs(epochs_dir, exist_ok=True)
+    plans = _read_plans(epochs_dir)
+    committed = set(os.listdir(epochs_dir))
+    epochs = [(e, plans[e]) for e in sorted(plans) if f"epoch_{e:05d}.done" not in committed]
+    seen = {f for files in plans.values() for f in files}
+    base, arrived = _list_feed(feed_dir)
+    first_new = max(plans, default=-1) + 1
+    epochs += enumerate(([f] for f in arrived if f not in seen), first_new)
+    for epoch_id, files in epochs:
+        if time.monotonic() >= deadline:
+            break
+        if epoch_id >= first_new:
+            _write_plan(epochs_dir, epoch_id, files)
+        batch_df = (
+            spark.read.schema(schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(*[f"{base}/{f}" for f in files])
+        )
+        body(batch_df, epoch_id)
+        open(os.path.join(epochs_dir, f"epoch_{epoch_id:05d}.done"), "w").close()
+
+
 def run_cdc_pipeline(
     spark: SparkSession,
     feed_dir: str,
@@ -342,14 +381,8 @@ def run_cdc_pipeline(
     extracted and return the per-epoch metrics rows, read on the driver
     (every epoch so far, not just this call's), in epoch order.
 
-    Epochs are planned on the driver, one per feed file in arrival
-    order: before epoch E runs, its file list is written to
-    ``out_dir/epochs/epoch_E.json`` (the write-ahead record), and a
-    file named in any plan has been seen.  An epoch's metrics row is
-    written last, so it is the epoch's commit.  On entry every planned
-    epoch without a metrics row is replayed on its recorded files, then
-    each unseen file is planned and run.  A call that finds nothing new
-    lists the feed and returns without touching Spark.
+    The epochs are ``run_epochs``' on ``out_dir/epochs``: one per feed
+    file, and none, with no Spark job, when nothing new has arrived.
 
     Per epoch, one Spark job over a batch read of its files:
     1. A10: write the stringified extract, demuxed by table (B1), to
@@ -372,24 +405,14 @@ def run_cdc_pipeline(
     pushed to the scan, never interpolated into SQL text.
 
     ``timeout_sec`` bounds the call (the run CLI's
-    ``--run-duration-min``): no epoch starts after it, and an epoch that
-    has started runs to completion.  The next call on the same
-    ``out_dir`` picks up the files left over.
+    ``--run-duration-min``), as in ``run_epochs``.
     """
-    deadline = time.monotonic() + timeout_sec
     extract_dir = os.path.join(out_dir, "extract")
     staging_dir = os.path.join(out_dir, "staging")
     metrics_dir = os.path.join(out_dir, "metrics")
-    epochs_dir = os.path.join(out_dir, "epochs")
     os.makedirs(metrics_dir, exist_ok=True)
-    os.makedirs(epochs_dir, exist_ok=True)
 
-    def run_epoch(epoch_id: int, paths: list[str]) -> None:
-        batch_df = (
-            spark.read.schema(CHANGES_SCHEMA)
-            .option("recursiveFileLookup", "true")
-            .parquet(*paths)
-        )
+    def epoch_body(batch_df: DataFrame, epoch_id: int) -> None:
         if tables:
             batch_df = batch_df.filter(F.col("table_name").isin(*tables))
         # one Observation per epoch: an Observation reports only its
@@ -411,23 +434,10 @@ def run_cdc_pipeline(
         if on_epoch is not None:
             on_epoch(row)
 
-    plans = _read_plans(epochs_dir)
-    committed = set(os.listdir(metrics_dir))
-    epochs = [
-        (e, plans[e])
-        for e in sorted(plans)
-        if f"epoch_{e:05d}.parquet" not in committed
-    ]
-    seen = {f for files in plans.values() for f in files}
-    base, arrived = _list_feed(feed_dir)
-    first_new = max(plans, default=-1) + 1
-    epochs += enumerate(([f] for f in arrived if f not in seen), first_new)
-    for epoch_id, files in epochs:
-        if time.monotonic() >= deadline:
-            break
-        if epoch_id >= first_new:
-            _write_plan(epochs_dir, epoch_id, files)
-        run_epoch(epoch_id, [f"{base}/{f}" for f in files])
+    run_epochs(
+        spark, feed_dir, os.path.join(out_dir, "epochs"), CHANGES_SCHEMA,
+        epoch_body, timeout_sec,
+    )
     return read_epoch_metrics(metrics_dir)
 
 
@@ -437,45 +447,38 @@ def run_observed_staleness(
     out_dir: str,
     now_ms: int,
 ) -> list[dict]:
-    """A12 streaming form — the staleness monitor
+    """A12 standalone form — the staleness monitor
     (``QueryRequestRunnable.java:30-54``: sample ``now − uptodate`` every
-    10 ms off a shared static) becomes ``df.observe()`` metrics read from
-    ``StreamingQueryProgress`` — engine-delivered per epoch, no shared
-    mutable state, no unsynchronized cross-thread read (§2 bug 4).
+    10 ms off a shared static) becomes an ``Observation`` on each
+    epoch's read of the feed, collected to the driver as the epoch's
+    action finishes — no shared mutable state, no unsynchronized
+    cross-thread read (§2 bug 4).
 
-    Returns one dict per epoch: observed row count, max commit ts, and
-    the staleness lag against the fixed ``now_ms`` (determinism rule:
-    never wall clock).  Driver-side cost is O(epochs).  This is a
-    standalone monitor over the whole feed; the ``run`` CLI does not
-    start it, and reads staleness off ``run_cdc_pipeline``'s own epoch
-    rows instead.
+    Returns one dict per epoch this call ran that had rows: observed
+    row count, max commit ts, and the staleness lag against the fixed
+    ``now_ms`` (determinism rule: never wall clock).  Driver-side cost
+    is O(epochs).  The epochs come from ``run_epochs`` on
+    ``out_dir/obs_epochs``.  The ``run`` CLI does not call this, and
+    reads staleness off ``run_cdc_pipeline``'s own epoch rows instead.
     """
-    checkpoint_dir = os.path.join(out_dir, "obs_checkpoint")
-    observed = read_change_stream(spark, feed_dir).observe(
-        "freshness",
-        F.count(F.lit(1)).alias("n_rows"),
-        F.max("commit_ts_ms").alias("uptodate_ms"),
-    )
     progress: list[dict] = []
 
     def epoch_body(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.format("noop").mode("overwrite").save()
+        obs = Observation()
+        batch_df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_rows"),
+            F.max("commit_ts_ms").alias("uptodate_ms"),
+        ).write.format("noop").mode("overwrite").save()
+        row = obs.get
+        if row["n_rows"]:
+            lag = now_ms - row["uptodate_ms"]
+            progress.append({"batch_id": epoch_id, **row, "staleness_ms": lag})
 
-    q = run_available_now(
-        observed.writeStream.foreachBatch(epoch_body), checkpoint_dir
+    run_epochs(
+        spark, feed_dir, os.path.join(out_dir, "obs_epochs"), CHANGES_SCHEMA,
+        epoch_body,
     )
-    for p in q.recentProgress:
-        row = p["observedMetrics"].get("freshness") if p["observedMetrics"] else None
-        if row is None or row["n_rows"] == 0:
-            continue
-        progress.append(
-            {
-                "batch_id": p["batchId"],
-                "n_rows": row["n_rows"],
-                "uptodate_ms": row["uptodate_ms"],
-                "staleness_ms": now_ms - row["uptodate_ms"],
-            }
-        )
     return progress
 
 
@@ -829,14 +832,14 @@ def run_ivf_maintenance(
     spark: SparkSession, feed_dir: str, out_dir: str
 ) -> DataFrame:
     """Streaming incremental IVF index maintenance (round 9): each
-    micro-batch of newly arrived vectors folds into the persisted
+    epoch of newly arrived vectors folds into the persisted
     per-(cell, dim) partials — merge(index, batch partials), NEVER a
     rebuild from the raw corpus — and every epoch emits the serving
     snapshot (per cell: member count + integer centroid fingerprint).
-    This is ivf_index_merge's contract run as a LIVE foreachBatch loop:
-    the oracle recomputes each epoch's snapshot from scratch, so the
-    value-hash match proves merge ≡ rebuild at every epoch, not just
-    the final one.
+    This is ivf_index_merge's contract run as a live epoch loop
+    (``run_epochs``): the oracle recomputes each epoch's snapshot from
+    scratch, so the value-hash match proves merge ≡ rebuild at every
+    epoch, not just the final one.
 
     Arithmetic matches functions/similarity.ivf_index_merge exactly:
     components fixed-pointed to non-negative micros
@@ -852,7 +855,6 @@ def run_ivf_maintenance(
     being read while the new one writes, the same
     write-new-then-publish discipline as every cache in the repo."""
     snap_dir = os.path.join(out_dir, "snapshots")
-    checkpoint_dir = os.path.join(out_dir, "checkpoint")
     state_dir = os.path.join(out_dir, "state")
     os.makedirs(state_dir, exist_ok=True)
     # Layout guard (ADVICE r10): the final read sweeps snap_dir
@@ -927,21 +929,18 @@ def run_ivf_maintenance(
             )
             .select("epoch_id", "label", "n_total", "centroid_fp")
             # Versioned per-epoch dir with overwrite, NOT a flat
-            # append (ADVICE r9): foreachBatch is at-least-once, so a
-            # retried micro-batch must replace its epoch's snapshot
-            # rows, never duplicate them — same state_{epoch}
-            # discipline as the index partials above.
+            # append (ADVICE r9): an epoch runs at least once, so a
+            # replayed epoch must replace its snapshot rows, never
+            # duplicate them — same state_{epoch} discipline as the
+            # index partials above.
             .write.mode("overwrite")
             .parquet(os.path.join(snap_dir, f"epoch_{epoch_id:05d}"))
         )
 
-    stream = (
-        spark.readStream.schema(EMBEDDING_FEED_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(feed_dir)
+    run_epochs(
+        spark, feed_dir, os.path.join(out_dir, "epochs"), EMBEDDING_FEED_SCHEMA,
+        epoch_body,
     )
-    run_available_now(stream.writeStream.foreachBatch(epoch_body), checkpoint_dir)
     if not os.path.isdir(snap_dir):
         # Empty feed (zero batches ever arrived): return an empty frame
         # of the contract schema instead of failing the final read.

@@ -7,8 +7,8 @@ group B).  The batch form is ``operators/cdc.py:latest_per_key`` (one
 (table, key) the engine keeps the running latest version in
 checkpointed per-group state and emits an updated snapshot row every
 time a micro-batch touches the key.  Contrast with streaming/upsert.py,
-which maintains the same snapshot with ``foreachBatch`` MERGE semantics
-*outside* engine state: here the snapshot IS the operator state —
+which maintains the same snapshot with a per-epoch MERGE *outside*
+engine state: here the snapshot IS the operator state —
 crash-safe, per-key partitioned, no read-modify-write of an external
 table per epoch.
 

@@ -1,5 +1,6 @@
-"""Incremental CDC snapshot maintenance — MERGE-style ``foreachBatch``
-upsert (SURVEY.md §2 B2/B3, incremental form).
+"""Incremental CDC snapshot maintenance — MERGE-style per-epoch upsert
+on ``run_epochs``' driver-planned epochs (SURVEY.md §2 B2/B3,
+incremental form).
 
 The reference stops at emitting raw change files; the capability those
 files exist to serve is a continuously-maintained current-state table.
@@ -29,17 +30,22 @@ Scale notes:
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import cache
 from ..operators.cdc import latest_per_key
-from .pipeline import read_change_stream, run_available_now
+from .pipeline import CHANGES_SCHEMA, run_epochs
 
 SNAPSHOT_COLS = (
     "table_name", "key", "last_event_id", "last_action",
     "last_val_cents", "last_commit_ts_ms",
+)
+_SNAPSHOT_SCHEMA = (
+    "table_name string, key long, last_event_id long, last_action string, "
+    "last_val_cents long, last_commit_ts_ms long"
 )
 
 
@@ -57,8 +63,8 @@ def merge_epoch(snapshot: DataFrame | None, batch: DataFrame) -> DataFrame:
     Known limit (shared with every tombstone-dropping MERGE): a deleted
     key's tombstone leaves the snapshot immediately, so a stale
     pre-delete version redelivered in a LATER epoch would reinstate the
-    key.  Exactly-once epoch delivery (the checkpointed foreachBatch
-    contract) rules that out here; pipelines that must survive
+    key.  Exactly-once epoch delivery (``run_epochs``' planned and
+    committed epochs) rules that out here; pipelines that must survive
     cross-epoch redelivery retain tombstones for a retention window —
     that policy is implemented in cdc_log_compaction.
     """
@@ -91,6 +97,38 @@ def merge_epoch(snapshot: DataFrame | None, batch: DataFrame) -> DataFrame:
     return merged.filter(F.col("last_action") != "D")
 
 
+def maintain_table(
+    spark: SparkSession,
+    feed_dir: str,
+    out_dir: str,
+    name: str,
+    schema: str,
+    merge: Callable[[DataFrame | None, DataFrame], DataFrame],
+) -> DataFrame:
+    """Maintain the table ``out_dir/name`` across every feed epoch and
+    return it.  Per epoch, ``merge(stored, batch_df)`` (``stored`` is
+    None before the first epoch) is written as version
+    ``name.v{epoch_id}`` and published by a crash-safe pointer swap
+    (cache.publish_snapshot): the table is never absent mid-publish, so
+    a replayed epoch merges into the previous state instead of
+    rebuilding from one epoch.  Reads take ``schema``, so none infers
+    it with a Spark job.
+    """
+    table_dir = os.path.join(out_dir, name)
+    read = spark.read.schema(schema)
+
+    def epoch_body(batch_df: DataFrame, epoch_id: int) -> None:
+        stored = read.parquet(table_dir) if os.path.exists(table_dir) else None
+        version = f"{table_dir}.v{epoch_id}"
+        merge(stored, batch_df).write.mode("overwrite").parquet(version)
+        cache.publish_snapshot(version, table_dir)
+
+    run_epochs(
+        spark, feed_dir, os.path.join(out_dir, "epochs"), CHANGES_SCHEMA, epoch_body
+    )
+    return read.parquet(table_dir)
+
+
 def run_incremental_snapshot(
     spark: SparkSession,
     feed_dir: str,
@@ -98,26 +136,7 @@ def run_incremental_snapshot(
 ) -> DataFrame:
     """Maintain the snapshot across every available epoch; returns the
     final snapshot DataFrame."""
-    snap_dir = os.path.join(out_dir, "snapshot")
-    checkpoint_dir = os.path.join(out_dir, "snap_checkpoint")
-
-    def epoch_body(batch_df: DataFrame, epoch_id: int) -> None:
-        spark_l = batch_df.sparkSession
-        current = (
-            spark_l.read.parquet(snap_dir) if os.path.exists(snap_dir) else None
-        )
-        merged = merge_epoch(current, batch_df).select(*SNAPSHOT_COLS)
-        version = snap_dir + f".v{epoch_id}"
-        merged.write.mode("overwrite").parquet(version)
-        # crash-safe pointer swap (cache.publish_snapshot): the snapshot
-        # path is never absent mid-publish — a crash between the naive
-        # two renames would make the replayed epoch see "no snapshot"
-        # and silently rebuild from one epoch.  (Delta/Iceberg replaces
-        # this pointer with a MERGE metadata commit.)
-        cache.publish_snapshot(version, snap_dir)
-
-    run_available_now(
-        read_change_stream(spark, feed_dir).writeStream.foreachBatch(epoch_body),
-        checkpoint_dir,
+    return maintain_table(
+        spark, feed_dir, out_dir, "snapshot", _SNAPSHOT_SCHEMA,
+        lambda stored, batch: merge_epoch(stored, batch).select(*SNAPSHOT_COLS),
     )
-    return spark.read.parquet(snap_dir)

@@ -1,11 +1,20 @@
 """Local mirror of the driver's t2 check: run a Spark query and its
 DuckDB oracle over the same parquet fixtures, compare row count, schema
 shape and order-insensitive values (columns sorted by name, rows sorted
-by all columns)."""
+by all columns).
+
+Run from the repo root against any fixture dir (sf0.01, or a
+``tools/gen_scale_fixture.py`` scale point):
+
+    python -m tests.oracle_check <fixture_dir> name [name ...]
+"""
 
 from __future__ import annotations
 
 import math
+import os
+import sys
+import time
 from pathlib import Path
 
 import duckdb
@@ -14,10 +23,15 @@ from cdc_extractor_spark.io import TABLES
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """One view per fixture table that ``sf_dir`` holds.  A table is a
+    parquet file, or a directory of part files as
+    ``tools/gen_scale_fixture.py`` writes it."""
     con = duckdb.connect()
     for t in TABLES:
         p = Path(sf_dir) / f"{t}.parquet"
-        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{p}'")
+        if p.exists():
+            src = p / "*.parquet" if p.is_dir() else p
+            con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
     return con
 
 
@@ -83,3 +97,31 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str, name: str = "?")
         f"{name}: {len(mismatches)}/{len(sn)} rows differ; first: "
         f"spark={mismatches[0][1]} duckdb={mismatches[0][2]}"
     )
+    return len(sn)
+
+
+def main(argv: list[str]) -> int:
+    """Compare each named registry query with its oracle over the
+    fixture ``argv[0]``; print one line per name and a total.  Exit
+    status 1 if any name differs."""
+    from cdc_extractor_spark.queries import ORACLES, QUERIES
+    from cdc_extractor_spark.session import get_session
+
+    sf_dir, names = os.path.abspath(argv[0]), argv[1:]
+    spark = get_session(app_name="oracle_check")
+    con = duckdb_conn(sf_dir)
+    n_ok = 0
+    for name in names:
+        t0 = time.perf_counter()
+        try:
+            n_rows = compare(QUERIES[name](spark, sf_dir), con, ORACLES[name], name)
+            verdict, n_ok = f"MATCH rows={n_rows}", n_ok + 1
+        except AssertionError as e:
+            verdict = f"MISMATCH {e}"
+        print(f"{name}: {verdict} {time.perf_counter() - t0:.1f}s", flush=True)
+    print(f"{n_ok}/{len(names)} match")
+    return int(n_ok < len(names))
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))

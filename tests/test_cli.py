@@ -159,9 +159,9 @@ def test_replayed_epoch_keeps_one_metrics_row(spark, staged, tmp_path):
     assert sorted(first) == [0, 1]
     extracted = _extract_rows(out)
     assert sum(extracted.values()) == sum(r["n_rows"] for r in first.values())
-    # an epoch's metrics row is its commit: dropping it leaves epoch 1
-    # planned but uncommitted, as a crash after its extract would
-    os.remove(os.path.join(out, "metrics", "epoch_00001.parquet"))
+    # dropping epoch 1's commit record leaves it planned but
+    # uncommitted, as a crash after its extract would
+    os.remove(os.path.join(out, "epochs", "epoch_00001.done"))
     replayed: list[dict] = []
     again = run_cdc_pipeline(spark, feed, out, on_epoch=replayed.append)
     assert [r["epoch_id"] for r in replayed] == [1]
@@ -262,7 +262,7 @@ def test_uncommitted_epoch_replays_its_planned_files_only(spark, staged, tmp_pat
     planned = _plans(out)
     assert sorted(planned) == [0, 1]
     assert all(len(files) == 1 for files in planned.values())
-    os.remove(os.path.join(out, "metrics", "epoch_00001.parquet"))
+    os.remove(os.path.join(out, "epochs", "epoch_00001.done"))
     _publish(staged, feed, 2)
     extracted: list[dict] = []
     again = run_cdc_pipeline(spark, feed, out, on_epoch=extracted.append)
@@ -292,6 +292,91 @@ def test_hidden_feed_files_are_never_planned(spark, staged, tmp_path):
     rows = run_cdc_pipeline(spark, feed, out)
     assert [r["n_rows"] for r in rows] == [spark.read.parquet(part).count()]
     assert _plans(out) == {0: [os.path.relpath(part, feed)]}
+
+
+@pytest.fixture(scope="module")
+def staged_embeddings(spark, sf_dir, tmp_path_factory):
+    """A three-batch embedding feed, written once."""
+    from cdc_extractor_spark.io import load_table
+    from cdc_extractor_spark.streaming.pipeline import write_embedding_batches
+
+    feed = str(tmp_path_factory.mktemp("emb_feed"))
+    write_embedding_batches(load_table(spark, sf_dir, "embeddings"), feed, 3)
+    return feed
+
+
+def _epoch_pass(name: str):
+    """``(run(spark, feed_dir, out_dir), feed kind)`` for each pass that
+    keeps no engine state besides ``run_cdc_pipeline``."""
+    from cdc_extractor_spark.streaming import partials, pipeline, upsert
+
+    return {
+        "incremental_snapshot": (upsert.run_incremental_snapshot, "changes"),
+        "incremental_bitmap_distinct": (
+            partials.run_incremental_bitmap_distinct, "changes"
+        ),
+        "ivf_maintenance": (pipeline.run_ivf_maintenance, "embeddings"),
+        "observed_staleness": (
+            lambda spark, feed, out: pipeline.run_observed_staleness(
+                spark, feed, out, now_ms=0
+            ),
+            "changes",
+        ),
+    }[name]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "incremental_snapshot",
+        "incremental_bitmap_distinct",
+        "ivf_maintenance",
+        "observed_staleness",
+    ],
+)
+def test_epoch_pass_starts_no_query_and_an_idle_call_is_free(
+    spark, staged, staged_embeddings, tmp_path, monkeypatch, name
+):
+    """The passes that keep no engine state run on the driver-planned
+    epochs: no call starts a StreamingQuery or writes a checkpoint, and
+    a second call with no new feed file schedules no Spark job."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    started = []
+    start = DataStreamWriter.start
+
+    def counting_start(self, *args, **kwargs):
+        started.append(self)
+        return start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", counting_start)
+    run, kind = _epoch_pass(name)
+    feed = staged if kind == "changes" else staged_embeddings
+    out = str(tmp_path / "out")
+    first = run(spark, feed, out)
+    if not isinstance(first, list):
+        first = first.collect()
+    assert first
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    run(spark, feed, out)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert started == []
+    assert [d for d in os.listdir(out) if d.endswith("checkpoint")] == []
+
+
+def test_foreach_batch_only_where_the_engine_keeps_state():
+    """``foreachBatch`` appears only in ``streaming/snapshot_state.py``,
+    whose stateful operator upstream needs a StreamingQuery; every
+    other epoch body runs on ``run_epochs``."""
+    pkg = Path(__file__).resolve().parent.parent / "cdc_extractor_spark"
+    sites = sorted(
+        str(path.relative_to(pkg))
+        for path in pkg.rglob("*.py")
+        if ".foreachBatch(" in path.read_text()
+    )
+    assert sites == ["streaming/snapshot_state.py"]
 
 
 def test_every_streaming_pass_goes_through_the_runner():

@@ -8,7 +8,9 @@ nanos ``events.ts`` column arrives as NTZ rather than the
 on NTZ).  ``io.load_table`` normalizes all NTZ columns to TimestampType
 so every query is correct under any caller-built session; this module
 re-runs the FULL oracle-parity suite with the driver's reader configs
-simulated on the shared session.
+simulated on the shared session.  It runs at ``conftest.SMOKE_SF``
+(sf0.001).  To compare named queries at sf0.01, run
+``python -m tests.oracle_check <sf0.01 fixture dir> name ...``.
 """
 
 from __future__ import annotations

@@ -17,6 +17,9 @@ happen with a recorded rationale.
 from __future__ import annotations
 
 import hashlib
+import os
+import sys
+import tempfile
 
 import pytest
 
@@ -99,16 +102,45 @@ def test_ledger_names_are_registered():
     assert not unknown, f"stale exclusion-ledger names: {unknown}"
 
 
+# The temp dir the rest of the suite uses; the empty fixture's caches
+# must not land there.
+_REAL_TMPDIR = tempfile.gettempdir()
+
+
 @pytest.fixture(scope="module")
 def empty_sf(spark, tmp_path_factory):
-    import os
-    import sys
-
+    """The zero-row fixture.  While it is live the temp dir is a dir
+    under the fixture's own base, so the feeds and caches built over it
+    (keyed on a path pytest deletes later) leave nothing behind in the
+    real temp dir."""
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.empty_sweep import make_empty_fixture
 
     base = str(tmp_path_factory.mktemp("empty_fixture"))
-    return make_empty_fixture(spark, base)
+    tmp = os.path.join(base, "tmp")
+    os.makedirs(tmp)
+    saved = tempfile.tempdir
+    tempfile.tempdir = tmp
+    try:
+        yield make_empty_fixture(spark, base)
+    finally:
+        tempfile.tempdir = saved
+
+
+def test_empty_fixture_builds_nothing_in_the_real_temp_dir(spark, empty_sf):
+    """A cache built over the empty fixture lands under the fixture's
+    base, not in the temp dir the rest of the suite shares."""
+    from cdc_extractor_spark.queries import QUERIES
+
+    def cdcx() -> set[str]:
+        return {n for n in os.listdir(_REAL_TMPDIR) if n.startswith("cdcx_")}
+
+    before = cdcx()
+    assert QUERIES["streaming_microbatch_epochs"](spark, empty_sf).collect() == []
+    assert cdcx() == before
+    fixture_tmp = tempfile.gettempdir()
+    assert os.path.dirname(fixture_tmp) == empty_sf
+    assert any(n.startswith("cdcx_feed_") for n in os.listdir(fixture_tmp))
 
 
 @pytest.mark.parametrize("name", sorted(EXPECTED_RAISERS))

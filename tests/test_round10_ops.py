@@ -148,13 +148,11 @@ class TestRound10Equivalences:
 
 class TestIvfMaintenanceRetryIdempotent:
     def test_full_replay_leaves_snapshots_unchanged(self, spark, tmp_path):
-        """foreachBatch is at-least-once: simulate the worst case — a
-        FULL replay of every micro-batch (fresh checkpoint, same
+        """An epoch runs at least once: simulate the worst case — a
+        FULL replay of every epoch (every commit record lost, same
         out_dir) — and require the epoch snapshots to be overwritten,
         not duplicated (ADVICE r9: the flat append would double every
         row on retry and break merge ≡ rebuild parity)."""
-        import shutil
-
         from cdc_extractor_spark.io import load_table
         from cdc_extractor_spark.streaming.pipeline import (
             run_ivf_maintenance,
@@ -168,13 +166,16 @@ class TestIvfMaintenanceRetryIdempotent:
         first = sorted(
             map(tuple, run_ivf_maintenance(spark, feed, out_dir).collect())
         )
-        # retry: same out_dir (snapshots + state survive), fresh
-        # checkpoint so the stream replays batches 0..2 with the SAME
-        # epoch ids
-        shutil.rmtree(str(tmp_path / "out" / "checkpoint"))
+        # retry: same out_dir (snapshots + state + plans survive), no
+        # commit records, so the runner replays batches 0..2 with the
+        # SAME epoch ids
+        commits = tmp_path / "out" / "epochs"
+        for done in commits.glob("epoch_*.done"):
+            done.unlink()
         second = sorted(
             map(tuple, run_ivf_maintenance(spark, feed, out_dir).collect())
         )
+        assert len(list(commits.glob("epoch_*.done"))) == 3
         assert second == first
 
     def test_empty_embeddings_guard(self, spark, tmp_path):
